@@ -51,6 +51,10 @@ SF0001 = "/root/testdata/sf0.001"
 # (harmless re-grades). Everything keeps registration order after the
 # window; nothing is unregistered.
 GRADE_WINDOW = [
+    # plan-changed on every host: the counter now reads only its key,
+    # and state partitions are min(cap, cores)
+    "stream_stateful_user_counts",
+    "stream_stateful_counts_rocksdb",
     # plan-changed re-grades (VERDICT r12 "What's wrong" #3)
     "stream_neardup_dedup",
     "multimodal_decode_png",

@@ -35,8 +35,7 @@ from ..sql_utils import floor_log2_case_sql as _floor_log2_case
 from ..session import (
     SCRATCH_ROOT,
     STREAM_DRAIN_TIMEOUT_SEC,
-    STREAM_STATE_PARTITIONS,
-    scoped_shuffle_partitions,
+    scoped_state_partitions,
 )
 from .registry import REGISTRY
 
@@ -449,7 +448,7 @@ def ev_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir, sink, ckpt = _stream_workdirs("ev_sessions", sf_dir)
     shutil.copy(src, os.path.join(in_dir, "events.parquet"))
 
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+    with scoped_state_partitions(spark):
         stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
         agg = (
             stream.withWatermark("ts", STREAM_WM_DELAY)
@@ -527,7 +526,7 @@ def ev_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir, sink, ckpt = _stream_workdirs("ev_ssjoin", sf_dir)
     shutil.copy(src, os.path.join(in_dir, "events.parquet"))
 
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+    with scoped_state_partitions(spark):
         stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
         purchases = (
             stream.filter(F.col("event_type") == "purchase")
@@ -618,7 +617,7 @@ def ev_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir, sink, ckpt = _stream_workdirs("ev_ssljoin", sf_dir)
     shutil.copy(src, os.path.join(in_dir, "events.parquet"))
 
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+    with scoped_state_partitions(spark):
         stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
         purchases = (
             stream.filter(F.col("event_type") == "purchase")
@@ -731,7 +730,7 @@ def ev_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("w", F.length("event_type").cast("long"))
     )
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+    with scoped_state_partitions(spark):
         stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
         enriched = stream.join(F.broadcast(static_dim), on="event_type").select(
             "event_id", "event_type", "w"
@@ -974,7 +973,7 @@ def ev_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir, sink, ckpt = _stream_workdirs("ev_windowed", sf_dir)
     shutil.copy(src, os.path.join(in_dir, "events.parquet"))
 
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+    with scoped_state_partitions(spark):
         stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
         agg = (
             stream.withWatermark("ts", STREAM_WM_DELAY)
@@ -1331,7 +1330,7 @@ def ev_stream_upsert_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sink)
         )
 
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+    with scoped_state_partitions(spark):
         stream = _with_event_ts(
             spark.readStream.schema(EVENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -2892,7 +2891,7 @@ def ev_stream_bitmap_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir, sink, ckpt = _stream_workdirs("ev_bitmap_hours", sf_dir)
     shutil.copy(src, os.path.join(in_dir, "events.parquet"))
 
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+    with scoped_state_partitions(spark):
         stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
         agg = (
             stream.withWatermark("ts", STREAM_WM_DELAY)

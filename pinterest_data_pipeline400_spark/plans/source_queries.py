@@ -173,8 +173,7 @@ def pyds_stream_envelope_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..session import (
         STREAM_DRAIN_TIMEOUT_SEC,
-        STREAM_STATE_PARTITIONS,
-        scoped_shuffle_partitions,
+        scoped_state_partitions,
     )
     from ..sources.envelope_datasource import register_envelope_source
 
@@ -187,7 +186,7 @@ def pyds_stream_envelope_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d in (sink, ckpt):
         shutil.rmtree(d, ignore_errors=True)
         os.makedirs(d, exist_ok=True)
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+    with scoped_state_partitions(spark):
         raw = (
             spark.readStream.format("kinesis_envelope")
             .option("path", topic_dir)

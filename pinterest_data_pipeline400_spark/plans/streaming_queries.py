@@ -28,8 +28,7 @@ from pyspark.sql import functions as F
 from ..generator import fixture_dir_for
 from ..session import (
     STREAM_DRAIN_TIMEOUT_SEC,
-    STREAM_STATE_PARTITIONS,
-    scoped_shuffle_partitions,
+    scoped_state_partitions,
 )
 from ..streaming import (
     RAW_SCHEMAS,
@@ -63,7 +62,7 @@ def _run_entry(
     stream_dir = os.path.join(fx, "stream", topic)
     base = os.path.join(_WORK_ROOT, f"{name}_{os.path.basename(fx)}")
     sink, ckpt = fresh_dirs(base)  # the single T5 reset implementation
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+    with scoped_state_partitions(spark):
         streamed = build(read_envelope_stream(spark, stream_dir))
         query = write_stream_append(streamed, sink, ckpt)
         try:
@@ -262,7 +261,7 @@ def _run_two_phase_stateful(
 
     def drain_phase(frame: "pd.DataFrame", fname: str) -> None:
         frame.to_parquet(os.path.join(in_dir, fname), index=False)
-        with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+        with scoped_state_partitions(spark):
             stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir)
             counts = op(stream)
             query = (
@@ -426,7 +425,7 @@ def _run_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def drain_phase(frame: "pd.DataFrame", fname: str) -> None:
         frame.to_parquet(os.path.join(in_dir, fname), index=False)
-        with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+        with scoped_state_partitions(spark):
             stream = spark.readStream.schema("doc_id long, text string").parquet(
                 in_dir
             )

@@ -114,16 +114,21 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     )
 
 
-#: Partition count for streaming STATE stores on this single-JVM test
-#: rig. Batch shuffles want one partition per core (AQE coalesces), but
-#: every state partition of a streaming query carries fixed per-micro-
-#: batch overhead — a state-store commit, checkpoint delta files, and
-#: (for applyInPandasWithState) a dedicated Python worker with a state
-#: server. At local fixture scale that overhead dominates: measured on
-#: the stateful-counts entry, 32 state partitions cost 3-8x the wall
-#: clock of 8, and degrade further when the listener/maintenance queues
-#: are busy after heavy batch queries. On a real cluster, size this to
-#: keyspace x executors via the env var instead.
+#: Cap on the partition count of streaming STATE stores; the count a
+#: query gets is ``min(cap, defaultParallelism)`` (see
+#: :func:`scoped_state_partitions`). Batch shuffles want one partition
+#: per core (AQE coalesces), but every state partition of a streaming
+#: query carries fixed per-micro-batch overhead — a state-store commit,
+#: checkpoint delta files, and (for applyInPandasWithState) a dedicated
+#: Python worker with a state server. At local fixture scale that
+#: overhead dominates: on local[32] the stateful-counts entry cost 3-8x
+#: the wall clock with 32 state partitions as with 8. Below the cap,
+#: more partitions than cores only add task waves: on local[4] (a
+#: 4-vCPU host), 8 partitions ran each phase in two waves, and 4 (with
+#: the key-only input of ``stateful_running_counts``) cut the stateful
+#: counts entry from 16.9 to 9.2 CPU-s (medians of 10 paired runs). On
+#: a real cluster, size the cap to keyspace x executors via the env
+#: var instead.
 STREAM_STATE_PARTITIONS = int(
     os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
 )
@@ -203,6 +208,18 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+@contextmanager
+def scoped_state_partitions(spark: SparkSession):
+    """:func:`scoped_shuffle_partitions` at the state-partition count
+    of a streaming query started inside it: one partition per core, at
+    most :data:`STREAM_STATE_PARTITIONS`. A restart over an existing
+    checkpoint keeps the count recorded in its offset log, whatever
+    this scope sets."""
+    n = min(STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+    with scoped_shuffle_partitions(spark, n):
+        yield
 
 
 def get_session() -> SparkSession:

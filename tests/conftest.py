@@ -32,7 +32,11 @@ def rewrite_oracle_sf(sql: str) -> str:
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app_name="pytest", cpus=8)
+    # local[SPARK_GRAFT_CPUS]: the suite's command exports the host's
+    # core count, so stateful entries run at that host's state-partition
+    # count; 8 when unset
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = build_session(app_name="pytest", cpus=cpus)
     yield s
 
 

@@ -18,7 +18,7 @@ from tests.conftest import TEST_SF_DIR, assert_frames_match, rewrite_oracle_sf
 #: timestamp/date-heavy entries — the ones a wrong session TZ breaks —
 #: plus the stateful streaming entries: those pin their state-store
 #: partition count from SESSION conf at first checkpoint
-#: (session.py pin_streaming_confs), and with the round-4 registration
+#: (session.scoped_state_partitions), and with the round-4 registration
 #: rotation the driver's own session executes them for the first time,
 #: so the mis-configured sibling must prove the pinning holds when the
 #: session arrives with 200 shuffle partitions and a non-UTC zone.

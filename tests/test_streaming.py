@@ -5,6 +5,7 @@ drain, add data, resume from the same checkpoint — no dupes, no loss)."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -18,6 +19,7 @@ from pinterest_data_pipeline400_spark.streaming import (
     clean_stream,
     decode_stream,
     read_envelope_stream,
+    stateful_running_counts,
     write_stream_append,
 )
 from tests.conftest import TEST_SF_NAME
@@ -108,10 +110,7 @@ def test_stateful_counts_on_rocksdb_statestore(spark, tmp_path):
 
     import pandas as pd
 
-    from pinterest_data_pipeline400_spark.streaming import (
-        ROCKSDB_PROVIDER,
-        stateful_running_counts,
-    )
+    from pinterest_data_pipeline400_spark.streaming import ROCKSDB_PROVIDER
 
     in_dir, sink, ckpt = (str(tmp_path / d) for d in ("in", "sink", "ckpt"))
     os.makedirs(in_dir)
@@ -227,8 +226,6 @@ def test_stateful_counts_string_key_col(spark, tmp_path):
     this guards the fix)."""
     import pandas as pd
 
-    from pinterest_data_pipeline400_spark.streaming import stateful_running_counts
-
     in_dir, sink, ckpt = (str(tmp_path / d) for d in ("in", "sink", "ckpt"))
     os.makedirs(in_dir)
     pd.DataFrame({"country": ["US", "US", "DE", "FR", "DE", "US"]}).to_parquet(
@@ -247,6 +244,86 @@ def test_stateful_counts_string_key_col(spark, tmp_path):
     assert q.awaitTermination(60)
     out = {r.country: r.n_events_so_far for r in spark.read.parquet(sink).collect()}
     assert out == {"US": 3, "DE": 2, "FR": 1}
+
+
+@pytest.mark.parametrize(
+    "schema,key_col",
+    [
+        ("event_id long, ts timestamp, user_id long, event_type string, "
+         "value double, props string", "user_id"),
+        ("ind long, country string, latitude double, longitude double", "country"),
+    ],
+)
+def test_stateful_counts_operator_reads_only_its_key(spark, tmp_path, schema, key_col):
+    """The counter's Python function is fed the key column alone,
+    whatever else the stream carries: each input column is converted
+    Arrow→pandas per group, and ``update`` only counts rows."""
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path))
+    node = stateful_running_counts(stream, key_col=key_col)._jdf.queryExecution().analyzed()
+    assert node.nodeName() == "FlatMapGroupsInPandasWithState"
+    args = node.functionExpr().children()
+    assert [args.apply(i).name() for i in range(args.size())] == [key_col]
+
+
+def _offset_log_partitions(ckpt: str) -> list[int]:
+    """``spark.sql.shuffle.partitions`` as each offset-log entry of a
+    checkpoint recorded it (an entry's second line is its metadata)."""
+    offsets = os.path.join(ckpt, "offsets")
+    out = []
+    for f in sorted((f for f in os.listdir(offsets) if f.isdigit()), key=int):
+        with open(os.path.join(offsets, f)) as fh:
+            meta = json.loads(fh.read().splitlines()[1])
+        out.append(int(meta["conf"]["spark.sql.shuffle.partitions"]))
+    return out
+
+
+@pytest.mark.parametrize(
+    "session_kind,cap_side",
+    [("engine", "above"), ("hostile", "above"), ("engine", "below")],
+)
+def test_state_partitions_follow_cores_and_survive_restart(
+    spark, duck, monkeypatch, session_kind, cap_side
+):
+    """The stateful two-phase harness checkpoints min(cap, cores)
+    state partitions, with the cap set above or below the session's
+    cores. Phase 2 starts under a different shuffle-partition value and
+    must keep phase 1's count (Spark restores it from the offset log),
+    with the oracle still matching. The hostile session arrives with
+    200 shuffle partitions and a non-UTC zone, as a caller-built
+    session may."""
+    import __spark_entry__ as entrymod
+    from pinterest_data_pipeline400_spark import session as session_mod
+    from pinterest_data_pipeline400_spark.plans import streaming_queries as sq
+    from tests.conftest import TEST_SF_DIR, assert_frames_match, rewrite_oracle_sf
+
+    cores = spark.sparkContext.defaultParallelism
+    cap = cores + 4 if cap_side == "above" else max(1, cores // 2)
+    monkeypatch.setattr(session_mod, "STREAM_STATE_PARTITIONS", cap)
+    n = min(cap, cores)
+    s = spark
+    if session_kind == "hostile":
+        s = spark.newSession()
+        s.conf.set("spark.sql.session.timeZone", "America/New_York")
+        s.conf.set("spark.sql.shuffle.partitions", "200")
+    phase_two = 1 if n > 1 else 2
+    seen = []
+
+    def op(stream):
+        seen.append(int(s.conf.get("spark.sql.shuffle.partitions")))
+        if len(seen) == 2:
+            s.conf.set("spark.sql.shuffle.partitions", str(phase_two))
+        return stateful_running_counts(stream)
+
+    name = f"state_partitions_{session_kind}_{cap_side}"
+    out = sq._run_two_phase_stateful(s, TEST_SF_DIR, name, op).toPandas()
+    assert seen == [n, n]
+    ckpt = os.path.join(sq._WORK_ROOT, f"{name}_{os.path.basename(TEST_SF_DIR)}", "ckpt")
+    logged = _offset_log_partitions(ckpt)
+    assert len(logged) >= 2 and set(logged) == {n}, logged
+    want = duck.execute(
+        rewrite_oracle_sf(entrymod.oracle_sql()["stream_stateful_user_counts"])
+    ).fetchdf()
+    assert_frames_match(out, want, name)
 
 
 def test_e2e_pq1_survives_pin_restart(spark, fx_dir, tmp_path):

@@ -1,16 +1,15 @@
-"""Round-13 optimization profiling helper.
+"""Profile a named subset of registered entries.
 
-Time a named subset of registered entries in isolation (min-of-2 via the
-noop sink, same methodology as bench.py) and write each entry's
-`.explain('formatted')` to plans/r14/<name>_<tag>.txt.
+Time each entry in isolation (min-of-2 via the noop sink, same
+methodology as bench.py) and write its `.explain('formatted')` to
+<out_dir>/<name>_<tag>.txt.
 
 Usage:
-    python tools_r14_profile.py <tag> <entry> [<entry> ...]
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-        python tools_r14_profile.py before q1_top_priority_per_nation ...
+    python tools_profile.py <out_dir> <tag> <entry> [<entry> ...]
+    SPARK_GRAFT_SF_DIR=<testdata>/sf0.1 SPARK_GRAFT_CPUS=32 \
+        python tools_profile.py plans/profile before q1_top_priority_per_nation ...
 
-Not part of the driver contract or bench; a working tool for the
-optimization round only.
+Not part of the entry-point contract or the bench.
 """
 
 from __future__ import annotations
@@ -31,18 +30,17 @@ from pinterest_data_pipeline400_spark.session import build_session  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     if sf_name.startswith("sf"):
         ensure_fixtures(sf_name)
-    spark = build_session(app_name=f"profile_r14_{tag}")
+    spark = build_session(app_name=f"profile_{tag}")
 
     import __spark_entry__ as entrymod
 
     qfns = entrymod.queries()
-    os.makedirs("plans/r14", exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
 
     def mat(df) -> None:
         df.write.format("noop").mode("overwrite").save()
@@ -62,7 +60,7 @@ def main() -> None:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            with open(f"plans/r14/{name}_{tag}.txt", "w") as fh:
+            with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
                 fh.write(plan)
             samples = []
             for _ in range(2):
