@@ -13,6 +13,10 @@ matter for both local correctness-testing and 1000-executor scale:
   * Session time zone pinned to UTC so timestamp semantics are identical
     to the DuckDB oracle and independent of the host.
   * Arrow enabled for any pandas exchange (the slow-path UDFs).
+  * The generated-code cache sized to hold a whole pass of queries
+    (:data:`CODEGEN_CACHE_ENTRIES`): at Spark's default of 100 entries
+    a steady-state batch pass recompiled every one of its generated
+    classes, the largest fixed cost of a query at fixture scale.
 """
 
 from __future__ import annotations
@@ -23,6 +27,26 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+#: ``spark.sql.codegen.cache.maxEntries``: how many compiled classes
+#: Spark's generated-code cache keeps. Spark builds that cache as a
+#: Guava cache of ``maximumSize`` entries split across 4 segments, each
+#: evicting its least recently used entries once it holds a quarter of
+#: the total. A working set near the cap therefore misses on almost
+#: every lookup, and a miss pays a Janino compile, class loading,
+#: interpreted runs of the new bytecode and a fresh JIT compile. One
+#: pin_etl pass (the three cleans, every DataFrame pq entry, the
+#: cleaned-table writes) generates 147 distinct sources (sf0.01,
+#: local[4]); at the default cap of 100 each steady pass recompiled
+#: 138 classes (``CodegenMetrics.METRIC_COMPILATION_TIME``), and at
+#: this cap none. A sweep of the whole registry generates far more:
+#: 4,453 distinct sources over the first 265 of its 316 entries at
+#: sf0.01. No cap that still bounds the classes a long session retains
+#: holds that sweep; 2000 holds a pass of related entries more than ten
+#: times over (each segment keeps 500). It is a static conf, read once when the JVM
+#: first generates code: a session the caller built itself (the
+#: driver's) keeps whatever its JVM started with.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def build_session(
@@ -41,6 +65,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # local-mode heap: the driver JVM IS the executor, so this is
         # the whole memory budget on the 128 GiB local[32] rig. 8g held
         # through round 9, but the sf1 full sweep runs the DOCUMENTED
@@ -85,6 +110,14 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's generated-code cache has compiled in this JVM so
+    far, one per cache miss (``CodegenMetrics.METRIC_COMPILATION_TIME``
+    samples every compile)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 #: Runtime-settable SQL confs every query depends on for correctness —

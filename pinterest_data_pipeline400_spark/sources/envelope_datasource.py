@@ -211,6 +211,21 @@ class EnvelopeDataSource(DataSource):
 def register_envelope_source(spark) -> None:
     """Idempotently register the connector on a session. Python-source
     filter pushdown ships behind a conf in Spark 4.1 (a reader that
-    implements ``pushFilters`` is rejected outright without it)."""
+    implements ``pushFilters`` is rejected outright without it).
+
+    Spark checks the name against the sources of the JVM's *active*
+    session, not of the session registering: with a sibling session
+    active that already has the connector, registering it on this one
+    fails with ``DATA_SOURCE_ALREADY_EXISTS``. So this session is made
+    active for the call, and the previous one restored after it."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(EnvelopeDataSource)
+    jsession = type(spark)._get_j_spark_session_class(spark._jvm)
+    previous = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(EnvelopeDataSource)
+    finally:
+        if previous.isDefined():
+            jsession.setActiveSession(previous.get())
+        else:
+            jsession.clearActiveSession()

@@ -179,19 +179,27 @@ def test_cleaned_tables_cache_isolated_per_session(spark):
     module dict keyed by id(spark): two sessions may never share
     checkpointed DataFrames, and a dead session's cache must die with
     it (so a recycled object id can't resurrect another session's
-    tables — VERDICT r3 nit #1)."""
+    tables — VERDICT r3 nit #1). The memoised joins the pq queries
+    read follow the same rule, and ``cleaned_tables`` still returns
+    only the three tables (its callers iterate it)."""
     from pinterest_data_pipeline400_spark.plans import pinterest_queries as pq
 
     sf_dir = "/root/testdata/sf0.001"
     t1 = pq.cleaned_tables(spark, sf_dir)
     sibling = spark.newSession()
     t2 = pq.cleaned_tables(sibling, sf_dir)
+    assert set(t1) == set(t2) == {"pin", "geo", "user"}
     # Distinct sessions get distinct cleaned DataFrames...
     assert t1["pin"] is not t2["pin"]
     # ...and identical results (same fixture, same pipeline).
     assert t1["pin"].count() == t2["pin"].count()
     # Same session + fixture returns the cached object (clean once).
     assert pq.cleaned_tables(spark, sf_dir)["pin"] is t1["pin"]
+    for join in (pq._joined, pq._pin_user):
+        j1, j2 = join(spark, sf_dir), join(sibling, sf_dir)
+        assert j1 is not j2 and j1.count() == j2.count()
+        assert join(spark, sf_dir) is j1
+    assert set(pq.cleaned_tables(spark, sf_dir)) == {"pin", "geo", "user"}
     # Cache storage is per-session state, not module-global state.
     assert getattr(sibling, pq._CACHE_ATTR) is not getattr(spark, pq._CACHE_ATTR)
 

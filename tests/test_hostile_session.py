@@ -69,13 +69,23 @@ SENSITIVE = [
     "ev_holt_winters_forecast",
     "ev_pagerank_users",
     "stream_neardup_dedup",
+    # registers the kinesis_envelope Python data source on the session
+    # it runs in; the fixture registers it on the engine session first,
+    # as a run of the registry does before the driver's session arrives
+    "pyds_stream_envelope_user",
 ]
 
 
 @pytest.fixture(scope="module")
 def hostile(spark):
     """A sibling session sharing the SparkContext but with its own SQL
-    conf, deliberately mis-set the way a naive driver session would be."""
+    conf, deliberately mis-set the way a naive driver session would be.
+    The engine session has registered the envelope connector already."""
+    from pinterest_data_pipeline400_spark.sources.envelope_datasource import (
+        register_envelope_source,
+    )
+
+    register_envelope_source(spark)
     s = spark.newSession()
     s.conf.set("spark.sql.session.timeZone", "America/New_York")
     s.conf.set("spark.sql.shuffle.partitions", "200")

@@ -111,6 +111,62 @@ def test_sql_twins_compile_to_same_plan_shape(spark):
             )
 
 
+#: The pq entries that read a memoised join: the seven over
+#: pin⋈geo⋈user, the two over pin⋈user, and their SQL twins.
+_JOIN_MEMO_READERS = [
+    "pq1_top_category_per_country",
+    "pq2_category_count_per_year",
+    "pq3a_top_user_per_country",
+    "pq3b_top_country_overall",
+    "pq4_top_category_per_age_group",
+    "pq5_median_followers_per_age_group",
+    "pq5_manual_median",
+    "pq7_median_followers_by_join_year",
+    "pq8_median_followers_by_year_age_group",
+    "pq1_sql", "pq2_sql", "pq3a_sql", "pq3b_sql", "pq4_sql", "pq5_sql",
+    "pq7_sql", "pq8_sql",
+]
+
+
+def test_pq_queries_read_the_memoised_join(spark):
+    """The join is checkpointed once per session, so no pq query that
+    reads it joins again (each used to re-scan the cleaned pin table
+    and launch its own broadcasts of geo and user)."""
+    import __spark_entry__ as em
+
+    qs = em.queries()
+    for name in _JOIN_MEMO_READERS:
+        plan = _plan(qs[name](spark, TEST_SF_DIR))
+        for join in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):
+            assert join not in plan, f"{name}: {join}"
+
+
+def test_codegen_cache_holds_a_pin_etl_pass(spark):
+    """A second pass of the batch job's entries (the three cleans and
+    every DataFrame pq query, on a fresh session as the benchmark
+    runs them) compiles no generated class: the cache keeps the whole
+    pass. At Spark's default cap of 100 entries the pass's ~140
+    distinct sources evicted each other, and every pass recompiled
+    them (session.CODEGEN_CACHE_ENTRIES)."""
+    import __spark_entry__ as em
+    from pinterest_data_pipeline400_spark.session import codegen_compiles
+
+    qs = em.queries()
+    names = ["pin_clean", "geo_clean", "user_clean"] + sorted(
+        n for n in qs if n.startswith("pq") and not n.endswith("_sql")
+    )
+
+    def compiles_in_a_pass() -> int:
+        session = spark.newSession()
+        before = codegen_compiles(session)
+        for name in names:
+            qs[name](session, TEST_SF_DIR).toPandas()
+        return codegen_compiles(session) - before
+
+    compiles_in_a_pass()
+    assert compiles_in_a_pass() == 0
+
+
 def test_partition_pruned_scan_reads_only_matching_days(spark):
     """ev_partition_pruned_scan's contract: the day predicate resolves
     against the Hive directory layout — PartitionFilters carries it and

@@ -2,7 +2,11 @@
 
 Time each entry in isolation (min-of-2 via the noop sink, same
 methodology as bench.py) and write its `.explain('formatted')` to
-<out_dir>/<name>_<tag>.txt.
+<out_dir>/<name>_<tag>.txt. Beside each wall it prints the classes
+Spark's generated-code cache compiled during each of the two runs: the
+first run compiles what no earlier entry generated, and a second run
+that still compiles means the cache is thrashing
+(`session.CODEGEN_CACHE_ENTRIES`).
 
 Usage:
     python tools_profile.py <out_dir> <tag> <entry> [<entry> ...]
@@ -26,7 +30,10 @@ os.environ.setdefault("SPARK_GRAFT_DISTINCT_MODE", "approx")
 os.environ.setdefault("SPARK_GRAFT_TOPK_MODE", "approx")
 
 from pinterest_data_pipeline400_spark.generator import ensure_fixtures  # noqa: E402
-from pinterest_data_pipeline400_spark.session import build_session  # noqa: E402
+from pinterest_data_pipeline400_spark.session import (  # noqa: E402
+    build_session,
+    codegen_compiles,
+)
 
 
 def main() -> None:
@@ -62,12 +69,13 @@ def main() -> None:
             )
             with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
                 fh.write(plan)
-            samples = []
+            samples, compiles = [], []
             for _ in range(2):
-                t0 = time.perf_counter()
+                c0, t0 = codegen_compiles(spark), time.perf_counter()
                 mat(qfns[name](spark, sf_dir))
                 samples.append(time.perf_counter() - t0)
-            out[name] = round(min(samples), 4)
+                compiles.append(codegen_compiles(spark) - c0)
+            out[name] = {"wall_s": round(min(samples), 4), "codegen_compiles": compiles}
         except Exception as exc:  # noqa: BLE001
             out[name] = f"{type(exc).__name__}: {exc}"[:300]
         finally:
