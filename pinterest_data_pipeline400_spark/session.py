@@ -17,6 +17,17 @@ matter for both local correctness-testing and 1000-executor scale:
     (:data:`CODEGEN_CACHE_ENTRIES`): at Spark's default of 100 entries
     a steady-state batch pass recompiled every one of its generated
     classes, the largest fixed cost of a query at fixture scale.
+  * Streaming checkpoints renamed through Hadoop's FileSystem API
+    (:data:`CHECKPOINT_FILE_MANAGER`), not FileContext: on a local
+    filesystem without libhadoop every FileContext rename forks a
+    ``readlink`` process.
+  * Python workers forked from a warm, frozen daemon
+    (:data:`PYTHON_DAEMON_MODULE`): no per-task garbage-collector walk
+    of the import-time heap and no per-task re-read of ``pyspark.zip``.
+
+A session the caller built itself (the driver's) keeps Spark's defaults
+for every setting made here; ``ensure_runtime_confs`` re-applies only
+those that results depend on.
 """
 
 from __future__ import annotations
@@ -48,6 +59,51 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 #: driver's) keeps whatever its JVM started with.
 CODEGEN_CACHE_ENTRIES = 2000
 
+#: ``spark.sql.streaming.checkpointFileManagerClass``. Spark's default
+#: manager is FileContext-based, and renames each offset, commit, state
+#: and sink-log file through ``AbstractFileSystem.renameInternal``, which
+#: calls ``getFileLinkStatus``; on a local filesystem without libhadoop
+#: Hadoop answers that by forking ``readlink``. One stream_ingest drain
+#: pass (sf0.02, local[4]) forked 533 commands, 376 of them ``readlink``
+#: on ``ckpt/{offsets,commits,sources,state}`` and
+#: ``sink/_spark_metadata`` files; with this manager it forks none. The
+#: other 157 are ``chmod``, which Hadoop also forks to set file modes
+#: without libhadoop, under either manager. Both managers check that the
+#: destination does not exist and then rename, and a ``file:`` rename is
+#: atomic, so the exactly-once contract is unchanged. A cluster with
+#: HDFS checkpoints keeps the FileContext default (PERF.md "100 TB
+#: configuration deltas"); a caller-built session keeps the default too.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+#: ``spark.python.daemon.module``: the module the JVM runs as ``python
+#: -m`` to fork Python workers (pyspark's default is ``pyspark.daemon``).
+#: :mod:`.pyworker` imports what every worker needs, drops
+#: ``pyspark.zip`` from the path when the interpreter's own pyspark is
+#: the same version, and freezes the heap before the first fork. Both
+#: halves remove a per-task cost: pyspark's daemon runs ``gc.collect()``
+#: after every task of a reused worker, a walk of the ~73k import-time
+#: objects (10-28 ms; ~0 frozen), and every task calls
+#: ``importlib.invalidate_caches()``, which makes Python 3.11's
+#: zipimporter re-read the zip's 1,328-entry directory (32-36 ms; 0.1 ms
+#: without the zip). On a one-batch ``stateful_running_counts`` run over
+#: 20,000 events with 4 state partitions (local[4], 4-vCPU host, later
+#: runs of one session), Python-worker CPU fell from 0.40-0.45 to
+#: 0.17-0.18 s with 10 keys (almost all per-task cost; 0.28 with only
+#: the zip dropped, 0.33-0.34 with only the freeze) and from 1.00-1.04 to
+#: 0.63-0.67 s with 1,500 keys; a session's first run, whose workers are
+#: all new, fell from 1.61 to 0.46 s. Workers must be
+#: able to import this package: :func:`build_session` puts its parent
+#: directory on ``spark.executorEnv.PYTHONPATH`` (a worker that cannot
+#: import the module fails every Python UDF). A caller-built session
+#: keeps ``pyspark.daemon``.
+PYTHON_DAEMON_MODULE = "pinterest_data_pipeline400_spark.pyworker"
+
+#: The directory that holds this package, for the workers' PYTHONPATH.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     app_name: str = "pinterest_data_pipeline400_spark",
@@ -66,6 +122,11 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER
+        )
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # local-mode heap: the driver JVM IS the executor, so this is
         # the whole memory budget on the 128 GiB local[32] rig. 8g held
         # through round 9, but the sf1 full sweep runs the DOCUMENTED
@@ -159,9 +220,14 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
 #: more partitions than cores only add task waves: on local[4] (a
 #: 4-vCPU host), 8 partitions ran each phase in two waves, and 4 (with
 #: the key-only input of ``stateful_running_counts``) cut the stateful
-#: counts entry from 16.9 to 9.2 CPU-s (medians of 10 paired runs). On
-#: a real cluster, size the cap to keyspace x executors via the env
-#: var instead.
+#: counts entry from 16.9 to 9.2 CPU-s (medians of 10 paired runs). The
+#: Python side of one state partition's task, on a one-batch
+#: ``stateful_running_counts`` run over 20,000 events on local[4] (4
+#: state partitions, later runs in one session): ~0.10-0.11 worker CPU-s
+#: with 10 keys (almost all of it per-task cost) and ~0.25 with 1,500
+#: keys from pyspark's own daemon; ~0.045 and ~0.16 from
+#: :data:`PYTHON_DAEMON_MODULE`. On a real cluster, size the cap to
+#: keyspace x executors via the env var instead.
 STREAM_STATE_PARTITIONS = int(
     os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
 )

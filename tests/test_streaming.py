@@ -326,6 +326,48 @@ def test_state_partitions_follow_cores_and_survive_restart(
     assert_frames_match(out, want, name)
 
 
+def _checkpoint_manager(s, path: str) -> str:
+    """Class of the manager Spark builds for a checkpoint at ``path``."""
+    jvm = s._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    conf = s._jsparkSession.sessionState().newHadoopConf()
+    return mgr.create(jvm.org.apache.hadoop.fs.Path(path), conf).getClass().getName()
+
+
+def test_engine_checkpoints_rename_through_filesystem(spark, tmp_path):
+    """Spark's FileContext-based default forks a ``readlink`` per
+    checkpoint rename on a local filesystem without libhadoop; the
+    engine session uses the FileSystem-based manager instead."""
+    got = _checkpoint_manager(spark, str(tmp_path))
+    assert got.endswith(".FileSystemBasedCheckpointFileManager"), got
+
+
+@pytest.mark.parametrize(
+    "name,work", [
+        ("stream_stateful_user_counts", "stateful_counts"),
+        ("stream_stateful_counts_rocksdb", "stateful_counts_rocksdb"),
+    ],
+)
+def test_two_phase_restart_on_sibling_session(spark, duck, name, work):
+    """A sibling session with 200 shuffle partitions and a non-UTC zone
+    inherits that manager, and under it still resumes both state stores
+    across the two-phase restart, with the oracle matching."""
+    import __spark_entry__ as entrymod
+    from pinterest_data_pipeline400_spark.plans import streaming_queries as sq
+    from tests.conftest import TEST_SF_DIR, assert_frames_match, rewrite_oracle_sf
+
+    s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/New_York")
+    s.conf.set("spark.sql.shuffle.partitions", "200")
+    out = entrymod.queries()[name](s, TEST_SF_DIR).toPandas()
+    ckpt = os.path.join(sq._WORK_ROOT, f"{work}_{os.path.basename(TEST_SF_DIR)}", "ckpt")
+    got = _checkpoint_manager(s, ckpt)
+    assert got.endswith(".FileSystemBasedCheckpointFileManager"), got
+    assert len([f for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit()]) >= 2
+    want = duck.execute(rewrite_oracle_sf(entrymod.oracle_sql()[name])).fetchdf()
+    assert_frames_match(out, want, name)
+
+
 def test_e2e_pq1_survives_pin_restart(spark, fx_dir, tmp_path):
     """The end-to-end architecture round trip (stream_e2e_pq1) with a
     crash in the middle: the pin stream drains HALF its files, the

@@ -1827,6 +1827,57 @@ def test_lshe_plan_is_banded_join(spark):
     assert "PythonUDF" not in plan and "MapInPandas" not in plan
 
 
+def test_lshe_prefilter_exact_under_in_doc_crc32_collision(spark):
+    """The crc32 upper bound |ih_a ∩ ih_b| undercounts the shared
+    shingles when two distinct shingles of one doc share a crc32, so
+    the prefilter must send such a doc's pairs to the exact verify.
+    'plumless' and 'buckeroo' have equal crc32, and so do any two
+    equal-length strings that differ only there: docs 1 and 2 each hold
+    the colliding pair 'x y plumless' / 'x y buckeroo'. Pair (1, 2) has
+    containment 1.0 but a bound of 4/5, under tau; pair (3, 4) is the
+    collision-free control. Thresholded output == unthresholded output
+    filtered at tau."""
+    import zlib
+
+    from pinterest_data_pipeline400_spark.operators.dedup import (
+        lshe_verified_pairs,
+    )
+
+    tau = 0.9
+    texts = {
+        1: "x y plumless q x y buckeroo",
+        2: "x y plumless q x y buckeroo w",
+        3: "a b c d e f g h",
+        4: "a b c d e f g h i",
+        5: "a b c d r s t u",
+    }
+
+    def shingles(t):
+        w = t.split(" ")
+        return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
+
+    sh1, sh2 = shingles(texts[1]), shingles(texts[2])
+    crc = lambda s: {zlib.crc32(x.encode()) for x in s}  # noqa: E731
+    assert len(crc(sh1)) < len(sh1), "no in-doc crc32 collision planted"
+    assert len(crc(sh1) & crc(sh2)) / len(sh1) < tau <= len(sh1 & sh2) / len(sh1)
+
+    docs = spark.createDataFrame(
+        sorted(texts.items()), "doc_id long, norm string"
+    )
+    got = lshe_verified_pairs(docs, min_containment=tau).toPandas()
+    full = lshe_verified_pairs(docs).toPandas()
+    want = full[
+        (full.c / full[["n_a", "n_b"]].min(axis=1)).round(6) >= tau
+    ]
+
+    def rows(df):
+        cols = ["doc_a", "doc_b", "c", "n_a", "n_b"]
+        return sorted(map(tuple, df[cols].values.tolist()))
+
+    assert {(1, 2), (3, 4)} <= {(a, b) for a, b, *_ in rows(want)}
+    assert rows(got) == rows(want)
+
+
 def test_emb_auto_geometry_rule(spark):
     """The corpus-count geometry rule: python helper and the measured
     scale anchors (14 bits at grading scale, 15 at sf0.1's 61.6k, 18

@@ -6,7 +6,16 @@ methodology as bench.py) and write its `.explain('formatted')` to
 Spark's generated-code cache compiled during each of the two runs: the
 first run compiles what no earlier entry generated, and a second run
 that still compiles means the cache is thrashing
-(`session.CODEGEN_CACHE_ENTRIES`).
+(`session.CODEGEN_CACHE_ENTRIES`). Two process counters follow, per run:
+
+* `child_processes`: processes started during the run, the delta of the
+  `processes` line of `/proc/stat`. It counts forks on the whole host,
+  not only this JVM's, so run it on an otherwise idle host; on one, a
+  streaming drain's count is mostly the `readlink` and `chmod` commands
+  Hadoop forks when libhadoop is absent.
+* `worker_cpu_s`: CPU seconds used by the JVM's live descendants (the
+  Python worker daemon and its forked workers), from `/proc`. A worker
+  that exits during the run takes its time with it.
 
 Usage:
     python tools_profile.py <out_dir> <tag> <entry> [<entry> ...]
@@ -29,11 +38,29 @@ os.environ.setdefault("SPARK_GRAFT_PERCENTILE_MODE", "approx")
 os.environ.setdefault("SPARK_GRAFT_DISTINCT_MODE", "approx")
 os.environ.setdefault("SPARK_GRAFT_TOPK_MODE", "approx")
 
+from perfbench.stats import tree_cpu_s  # noqa: E402
 from pinterest_data_pipeline400_spark.generator import ensure_fixtures  # noqa: E402
 from pinterest_data_pipeline400_spark.session import (  # noqa: E402
     build_session,
     codegen_compiles,
 )
+
+
+def forks_so_far() -> int:
+    """Processes started on the host since boot (``/proc/stat``)."""
+    with open("/proc/stat") as fh:
+        for line in fh:
+            if line.startswith("processes "):
+                return int(line.split()[1])
+    return 0
+
+
+def worker_cpu_s(jvm_pid: int) -> float:
+    """CPU seconds of the JVM's live descendants: its process tree less
+    the JVM itself (and the short commands it forked and reaped)."""
+    with open(f"/proc/{jvm_pid}/stat") as fh:
+        ticks = sum(int(v) for v in fh.read().rsplit(")", 1)[1].split()[11:15])
+    return tree_cpu_s(jvm_pid) - ticks / os.sysconf("SC_CLK_TCK")
 
 
 def main() -> None:
@@ -43,6 +70,7 @@ def main() -> None:
     if sf_name.startswith("sf"):
         ensure_fixtures(sf_name)
     spark = build_session(app_name=f"profile_{tag}")
+    jvm_pid = spark.sparkContext._gateway.proc.pid
 
     import __spark_entry__ as entrymod
 
@@ -69,13 +97,21 @@ def main() -> None:
             )
             with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
                 fh.write(plan)
-            samples, compiles = [], []
+            samples, compiles, forks, wcpu = [], [], [], []
             for _ in range(2):
-                c0, t0 = codegen_compiles(spark), time.perf_counter()
+                c0, f0, w0 = codegen_compiles(spark), forks_so_far(), worker_cpu_s(jvm_pid)
+                t0 = time.perf_counter()
                 mat(qfns[name](spark, sf_dir))
                 samples.append(time.perf_counter() - t0)
                 compiles.append(codegen_compiles(spark) - c0)
-            out[name] = {"wall_s": round(min(samples), 4), "codegen_compiles": compiles}
+                forks.append(forks_so_far() - f0)
+                wcpu.append(round(worker_cpu_s(jvm_pid) - w0, 2))
+            out[name] = {
+                "wall_s": round(min(samples), 4),
+                "codegen_compiles": compiles,
+                "child_processes": forks,
+                "worker_cpu_s": wcpu,
+            }
         except Exception as exc:  # noqa: BLE001
             out[name] = f"{type(exc).__name__}: {exc}"[:300]
         finally:
