@@ -24,9 +24,8 @@ def percentile_exact() -> bool:
     return os.environ.get("SPARK_GRAFT_PERCENTILE_MODE", "exact") != "approx"
 
 
-def percentile_accuracy() -> int:
-    """Accuracy knob for the approx path (1/accuracy relative rank error)."""
-    return int(os.environ.get("SPARK_GRAFT_PERCENTILE_ACCURACY", "10000"))
+#: Accuracy of the approx median (1/accuracy relative rank error).
+PERCENTILE_ACCURACY = 10000
 
 
 def distinct_exact() -> bool:
@@ -41,6 +40,5 @@ def distinct_exact() -> bool:
     return os.environ.get("SPARK_GRAFT_DISTINCT_MODE", "exact") != "approx"
 
 
-def distinct_rsd() -> float:
-    """Relative standard deviation for the HLL++ approx path."""
-    return float(os.environ.get("SPARK_GRAFT_DISTINCT_RSD", "0.01"))
+#: Relative standard deviation of the HLL++ approx distinct count.
+DISTINCT_RSD = 0.01

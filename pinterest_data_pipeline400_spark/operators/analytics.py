@@ -30,9 +30,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import (
+    DISTINCT_RSD,
+    PERCENTILE_ACCURACY,
     distinct_exact,
-    distinct_rsd,
-    percentile_accuracy,
     percentile_exact,
 )
 
@@ -87,7 +87,7 @@ def median_expr(
         exact = percentile_exact()
     if exact:
         return F.percentile(value, 0.5)
-    return F.percentile_approx(value, 0.5, accuracy or percentile_accuracy())
+    return F.percentile_approx(value, 0.5, accuracy or PERCENTILE_ACCURACY)
 
 
 def distinct_count_expr(
@@ -109,7 +109,7 @@ def distinct_count_expr(
         exact = distinct_exact()
     if exact:
         return F.count_distinct(F.col(value) if isinstance(value, str) else value)
-    return F.approx_count_distinct(value, rsd or distinct_rsd())
+    return F.approx_count_distinct(value, rsd or DISTINCT_RSD)
 
 
 def median_by(

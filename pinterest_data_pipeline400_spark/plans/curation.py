@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import cached_frame
 from .registry import REGISTRY
 from .training_data import (
     STOPWORDS,
@@ -831,15 +832,12 @@ def _langid_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-contained, publish is atomic, readers touch the generation."""
     import os as _os
 
-    from .training_data import cached_frame
-
     return cached_frame(
         spark,
         sf_dir,
         "langid",
         "labeled",
         _os.path.join(sf_dir, "documents.parquet"),
-        f"v1-{LANGID_VOCAB_K}",
         lambda: _langid_labeled_build(spark, sf_dir),
     )
 
@@ -1536,15 +1534,12 @@ def cached_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry and the apply-to-corpus entry consume it, so it materializes
     once ({BPE_MERGE_ROUNDS} tiny rows) instead of re-running the
     loop per consumer."""
-    from .training_data import cached_frame
-
     return cached_frame(
         spark,
         sf_dir,
         "bpe",
         "merges",
         os.path.join(sf_dir, "documents.parquet"),
-        f"v1-{BPE_MERGE_ROUNDS}-{BPE_TRAIN_WORDS}",
         lambda: _bpe_train(spark, sf_dir),
     )
 
@@ -2107,15 +2102,12 @@ def _probe_oracle_sql(rounds: int) -> str:
     "window runs over DISTINCT scores, bounded by the micro grain.",
 )
 def docs_quality_probe_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .training_data import cached_frame
-
     return cached_frame(
         spark,
         sf_dir,
         "probe",
         "quality_gd",
         os.path.join(sf_dir, "documents.parquet"),
-        f"v1-{PROBE_ROUNDS}-{PROBE_LR_DEN}",
         lambda: _quality_probe_train(spark, sf_dir),
     ).orderBy("round")
 
@@ -2920,16 +2912,12 @@ def _unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cached_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained unigram vocab (all EM steps), disk-cached per
     (documents stamp, code version) — the MODEL-CACHE rule."""
-    from .training_data import cached_frame
-
     return cached_frame(
         spark,
         sf_dir,
         "unigram",
         "vocab",
         os.path.join(sf_dir, "documents.parquet"),
-        f"v1-{UNI_MAX_WLEN}-{UNI_PIECE_MAX}-{UNI_VOCAB_N}-{UNI_EM_ROUNDS}"
-        f"-{BPE_TRAIN_WORDS}",
         lambda: _unigram_train(spark, sf_dir),
     )
 
@@ -3445,15 +3433,12 @@ def _clf_oracle_sql(rounds: int) -> str:
     "cuts). Oracle = the generated-CTE unroll (the probe idiom).",
 )
 def docs_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .training_data import cached_frame
-
     return cached_frame(
         spark,
         sf_dir,
         "clf",
         "quality_logit",
         os.path.join(fixture_dir_for(sf_dir), "docs_quality.parquet"),
-        f"v1-{CLF_ROUNDS}-{CLF_LR_NUM}",
         lambda: _quality_clf_train(spark, sf_dir),
     ).orderBy("round")
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import cached_frame, generation_dir
 from ..sql_utils import floor_log2_case_sql as _floor_log2_case
 from ..session import (
     SCRATCH_ROOT,
@@ -119,19 +120,6 @@ def ev_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value_cents",
         )
     )
-
-
-def _prune_stale_siblings(base: str) -> None:
-    """A content-stamped cache dir is being (re)built: delete sibling
-    dirs sharing its prefix up to the stamp — prior fixture
-    generations — so regenerations do not leak one full derived copy
-    each. Delegates to the shared grace-aged pruner: siblings younger
-    than PRUNE_GRACE_SEC survive so a concurrent session still
-    scanning the old stamp drains safely first."""
-    from ..session import prune_stale_siblings
-
-    prefix = base.rsplit("_", 2)[0]  # strip the mtime_size stamp
-    prune_stale_siblings(prefix + "_*", keep=base)
 
 
 def _stream_workdirs(name: str, sf_dir: str) -> tuple[str, str, str]:
@@ -269,31 +257,18 @@ def ev_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per fixture CONTENT) the events table
-    Hive-partitioned by day under /tmp; the layout IS the index the
-    pruned scan uses. The cache key folds in the source parquet's
-    mtime+size, so a regenerated fixture invalidates the copy instead
-    of silently serving the stale layout (ADVICE r3 #2)."""
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    stamp = f"{int(st.st_mtime_ns)}_{st.st_size}"
-    base = (
-        SCRATCH_ROOT + "/events_by_day_"
-        + os.path.basename(os.path.normpath(sf_dir))
-        + "_"
-        + stamp
-    )
-    marker = os.path.join(base, "_SUCCESS")
-    if not os.path.exists(marker):
-        _prune_stale_siblings(base)
+    """The events table Hive-partitioned by day, written once per
+    cache generation; the layout IS the index the pruned scan uses."""
+
+    def write(d: str) -> None:
         ev = _events(spark, sf_dir).withColumn(
             "day", F.date_format("ts", "yyyy-MM-dd")
         )
-        ev.write.mode("overwrite").partitionBy("day").parquet(base)
-    from ..session import mark_generation_used
+        ev.write.partitionBy("day").parquet(d)
 
-    mark_generation_used(base)  # grace-prune ages from last use, not write
-    return base
+    return generation_dir(
+        sf_dir, "events", "by_day", [os.path.join(sf_dir, "events.parquet")], write
+    )
 
 
 @REGISTRY.register(
@@ -1998,13 +1973,13 @@ def ev_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "documented trade for unbounded scale.",
 )
 def ev_value_deciles_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..config import percentile_accuracy, percentile_exact
+    from ..config import PERCENTILE_ACCURACY, percentile_exact
 
     ev = _events(spark, sf_dir)
     if percentile_exact():  # oracle mode: matches quantile_cont exactly
         q = "percentile(value, {p})"
     else:  # 100 TB mode: bounded-memory mergeable sketch
-        q = f"percentile_approx(value, {{p}}, {percentile_accuracy()})"
+        q = f"percentile_approx(value, {{p}}, {PERCENTILE_ACCURACY})"
     thr = ev.groupBy("event_type").agg(
         *[
             F.round(F.expr(q.format(p=i / 10)), 6).alias(f"d{i}")
@@ -2132,21 +2107,13 @@ ZORDER_USER_LO, ZORDER_USER_HI = 3, 9
 
 
 def _zordered_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per fixture CONTENT) a Z-order-clustered copy of
-    events: Morton key of (user_id, day index since 2024-01-01), range
-    partitioning into 32 files, in-file sort. The layout IS the index
-    — see operators/scale.py zorder_key."""
+    """A Z-order-clustered copy of events, written once per cache
+    generation: Morton key of (user_id, day index since 2024-01-01),
+    range partitioning into 32 files, in-file sort. The layout IS the
+    index — see operators/scale.py zorder_key."""
     from ..operators.scale import write_zordered
 
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    base = (
-        SCRATCH_ROOT + "/events_zorder_"
-        + os.path.basename(os.path.normpath(sf_dir))
-        + f"_{int(st.st_mtime_ns)}_{st.st_size}"
-    )
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        _prune_stale_siblings(base)
+    def write(d: str) -> None:
         ev = _events(spark, sf_dir).withColumn(
             "day", F.date_format("ts", "yyyy-MM-dd")
         )
@@ -2154,13 +2121,13 @@ def _zordered_events_dir(spark: SparkSession, sf_dir: str) -> str:
             ev,
             x=F.col("user_id"),
             y=F.datediff(F.to_date("day"), F.lit("2024-01-01").cast("date")),
-            dst_dir=base,
+            dst_dir=d,
             n_files=32,
         )
-    from ..session import mark_generation_used
 
-    mark_generation_used(base)  # grace-prune ages from last use, not write
-    return base
+    return generation_dir(
+        sf_dir, "events", "zorder", [os.path.join(sf_dir, "events.parquet")], write
+    )
 
 
 @REGISTRY.register(
@@ -3122,14 +3089,14 @@ _PSI_BIN_SQL = "CAST(1 + " + " + ".join(
     "types x 10 grid.",
 )
 def ev_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..config import percentile_accuracy, percentile_exact
+    from ..config import PERCENTILE_ACCURACY, percentile_exact
 
     ev = _events(spark, sf_dir)
     split = F.lit(PSI_SPLIT_TS).cast("timestamp")
     if percentile_exact():  # oracle mode: matches quantile_cont exactly
         q = "percentile(value, {p})"
     else:  # 100 TB mode: bounded-memory mergeable sketch
-        q = f"percentile_approx(value, {{p}}, {percentile_accuracy()})"
+        q = f"percentile_approx(value, {{p}}, {PERCENTILE_ACCURACY})"
     # two consumers (row binning + grid synthesis) hang off this
     # 5-row aggregate — persist it so the reference window is scanned
     # once; the registry wrapper's clearCache() drops it after the call
@@ -3921,15 +3888,12 @@ def _pagerank_oracle_sql(rounds: int) -> str:
 def ev_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    from .training_data import cached_frame
-
     return cached_frame(
         spark,
         sf_dir,
         "pagerank",
         "scores",
         _os.path.join(sf_dir, "events.parquet"),
-        f"v1-{PR_ROUNDS}-{PR_DAMP}-{PR_SCALE}",
         lambda: _pagerank_train(spark, sf_dir),
     ).orderBy("event_type")
 
@@ -4089,15 +4053,12 @@ def _pagerank_users_oracle_sql(rounds: int) -> str:
 def ev_pagerank_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    from .training_data import cached_frame
-
     return cached_frame(
         spark,
         sf_dir,
         "pagerank",
         "user_scores",
         _os.path.join(sf_dir, "events.parquet"),
-        f"v1-{PR_ROUNDS}-{PR_DAMP}-{PR_SCALE}",
         lambda: _pagerank_users_train(spark, sf_dir),
     ).orderBy("user_id")
 
@@ -5222,15 +5183,12 @@ def _markov_oracle_sql(rounds: int) -> str:
 def ev_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    from .training_data import cached_frame
-
     return cached_frame(
         spark,
         sf_dir,
         "markov",
         "attribution",
         _os.path.join(sf_dir, "events.parquet"),
-        f"v1-{MARKOV_ROUNDS}-{MARKOV_CONV_TYPE}",
         lambda: _markov_attribution_train(spark, sf_dir),
     ).orderBy("channel")
 

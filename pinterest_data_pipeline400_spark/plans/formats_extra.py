@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import generation_dir
 from ..generator import ensure_fixtures, fixture_dir_for
 from ..operators.multimodal import decode_ppm_features
 from ..session import SCRATCH_ROOT as _FMT_ROOT
@@ -57,47 +58,33 @@ def xml_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ppm_files_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per fixture content) each media_ppm payload as
-    its own ``<media_id>.ppm`` file — the on-disk shape a real image
+    """Each media_ppm payload as its own ``<media_id>.ppm`` file,
+    written once per cache generation — the on-disk shape a real image
     corpus lands in before ingestion."""
-    fx = fixture_dir_for(sf_dir)
-    src = os.path.join(fx, "media_ppm.parquet")
-    st = os.stat(src)
-    sf_root = os.path.join(_FMT_ROOT, os.path.basename(os.path.normpath(sf_dir)))
-    base = os.path.join(sf_root, f"ppm_files_{int(st.st_mtime_ns)}_{st.st_size}")
-    marker = os.path.join(base, "_DONE")
-    if not os.path.exists(marker):
-        # fixture regeneration changes the content key; drop stale
-        # generations instead of leaking one image tree per rewrite
-        # (grace-aged: a concurrent reader of the old stamp drains first)
-        from ..session import prune_stale_siblings
+    src = os.path.join(fixture_dir_for(sf_dir), "media_ppm.parquet")
 
-        prune_stale_siblings(os.path.join(sf_root, "ppm_files_*"), keep=base)
-        os.makedirs(base, exist_ok=True)
+    def write(d: str) -> None:
+        os.makedirs(d)
 
         # Executors write their own partitions' files (foreachPartition)
         # rather than funnelling every payload through the driver — the
         # shape a real corpus materialization has on a shared filesystem.
         # Writes go to an attempt-unique temp name and os.replace() into
         # place: duplicate task attempts (speculation, zombie retries)
-        # then race atomically instead of interleaving bytes into a
-        # corrupt file the _DONE marker would freeze forever.
+        # then race atomically instead of interleaving bytes into one
+        # corrupt file.
         def write_partition(rows) -> None:
             pid = os.getpid()
             for r in rows:
-                p = os.path.join(base, f"{int(r.media_id):06d}.ppm")
+                p = os.path.join(d, f"{int(r.media_id):06d}.ppm")
                 tmp = f"{p}.tmp.{pid}"
                 with open(tmp, "wb") as fh:
                     fh.write(bytes(r.payload))
                 os.replace(tmp, p)
 
         spark.read.parquet(src).foreachPartition(write_partition)
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
-    from ..session import mark_generation_used
 
-    mark_generation_used(base)  # grace-prune ages from last use, not write
-    return base
+    return generation_dir(sf_dir, "media", "ppm_files", [src], write)
 
 
 @REGISTRY.register(
@@ -219,26 +206,18 @@ def json_corrupt_tolerant_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def parquet_schema_evolution_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_path = os.path.join(sf_dir, "nation.parquet")
-    st = os.stat(src_path)
-    sf_root = os.path.join(_FMT_ROOT, os.path.basename(os.path.normpath(sf_dir)))
-    base = os.path.join(sf_root, f"nation_evolved_{int(st.st_mtime_ns)}_{st.st_size}")
-    v1, v2 = os.path.join(base, "era=v1"), os.path.join(base, "era=v2")
-    if not (os.path.exists(os.path.join(v1, "_SUCCESS"))
-            and os.path.exists(os.path.join(v2, "_SUCCESS"))):
-        # drop prior fixture generations' trees (grace-aged, see session)
-        from ..session import prune_stale_siblings
 
-        prune_stale_siblings(os.path.join(sf_root, "nation_evolved_*"), keep=base)
+    def write(d: str) -> None:
         src = spark.read.parquet(src_path)
         src.filter(F.col("n_nationkey") < 13).select(
             "n_nationkey", "n_name"
-        ).write.mode("overwrite").parquet(v1)
+        ).write.parquet(os.path.join(d, "era=v1"))
         src.filter(F.col("n_nationkey") >= 13).select(
             "n_nationkey", "n_name", "n_regionkey"
-        ).write.mode("overwrite").parquet(v2)
-    from ..session import mark_generation_used
+        ).write.parquet(os.path.join(d, "era=v2"))
 
-    mark_generation_used(base)  # grace-prune ages from last use, not write
+    base = generation_dir(sf_dir, "formats", "nation_evolved", [src_path], write)
+    v1, v2 = os.path.join(base, "era=v1"), os.path.join(base, "era=v2")
     back = spark.read.option("mergeSchema", "true").parquet(v1, v2)
     return back.select(
         "n_nationkey", "n_name", F.col("n_regionkey").cast("int")

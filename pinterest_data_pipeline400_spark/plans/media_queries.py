@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import cached_frame
 from ..generator import ensure_fixtures, fixture_dir_for
 from ..operators.multimodal import (
     decode_ppm_stats,
@@ -203,13 +204,7 @@ def _image_neardup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the cached_minhash_pairs idiom): BOTH the pair entry and the
     recall gauge consume it, so the decode + band join materializes
     once per (fixture generation, code version)."""
-    from ..operators.multimodal import (
-        DHASH_BANDS,
-        DHASH_GRID,
-        IMG_HAM_TAU,
-        dhash_near_dup_pairs,
-    )
-    from .training_data import cached_frame
+    from ..operators.multimodal import dhash_near_dup_pairs
 
     fx = fixture_dir_for(sf_dir)
     src = os.path.join(fx, "media_ppm_dup.parquet")
@@ -231,7 +226,6 @@ def _image_neardup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         "imagehash",
         "neardup_pairs",
         src,
-        f"v1-{DHASH_GRID}-{DHASH_BANDS}-{IMG_HAM_TAU}",
         build,
     )
 
@@ -363,13 +357,7 @@ def _audio_neardup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified audio near-dup pair list, disk-cached per fixture
     stamp — the _image_neardup_pairs_cached idiom: the pair entry and
     the recall gauge share one decode + band join per generation."""
-    from ..operators.multimodal import (
-        AUDIO_FP_FRAMES,
-        AUDIO_HAM_TAU,
-        DHASH_BANDS,
-        ahash_near_dup_pairs,
-    )
-    from .training_data import cached_frame
+    from ..operators.multimodal import ahash_near_dup_pairs
 
     fx = fixture_dir_for(sf_dir)
     src = os.path.join(fx, "media_wav_dup.parquet")
@@ -388,7 +376,6 @@ def _audio_neardup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         "audiohash",
         "neardup_pairs",
         src,
-        f"v1-{AUDIO_FP_FRAMES}-{DHASH_BANDS}-{AUDIO_HAM_TAU}",
         build,
     )
 

@@ -220,11 +220,11 @@ def _register_views(spark: SparkSession, sf_dir: str) -> None:
 def _median_sql(col: str) -> str:
     """SQL-string form of :func:`median_expr` honoring the same
     exact-vs-sketch engine switch."""
-    from ..config import percentile_accuracy, percentile_exact
+    from ..config import PERCENTILE_ACCURACY, percentile_exact
 
     if percentile_exact():
         return f"percentile({col}, 0.5)"
-    return f"percentile_approx({col}, 0.5, {percentile_accuracy()})"
+    return f"percentile_approx({col}, 0.5, {PERCENTILE_ACCURACY})"
 
 
 def _shared_oracle(name: str) -> str:

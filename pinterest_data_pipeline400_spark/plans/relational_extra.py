@@ -368,12 +368,12 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("monetary_cents"),
     )
-    from ..config import percentile_accuracy, percentile_exact
+    from ..config import PERCENTILE_ACCURACY, percentile_exact
 
     if percentile_exact():  # oracle mode: matches quantile_cont exactly
         med = "percentile(CAST({c} AS DOUBLE), 0.5)"
     else:  # 100 TB mode: bounded-memory mergeable sketch
-        med = f"percentile_approx(CAST({{c}} AS DOUBLE), 0.5, {percentile_accuracy()})"
+        med = f"percentile_approx(CAST({{c}} AS DOUBLE), 0.5, {PERCENTILE_ACCURACY})"
     thr = rfm.agg(
         F.round(F.expr(med.format(c="recency_days")), 6).alias("r_med"),
         F.round(F.expr(med.format(c="frequency")), 6).alias("f_med"),

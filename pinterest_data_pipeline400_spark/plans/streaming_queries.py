@@ -25,6 +25,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import cached_frame
 from ..generator import fixture_dir_for
 from ..session import (
     STREAM_DRAIN_TIMEOUT_SEC,
@@ -480,7 +481,7 @@ def _neardup_dedup_oracle() -> str:
 
 def cached_band_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, band_key): the planted-duplicate corpus's LSH band
-    index, disk-cached per (docs_dup stamp, geometry version) — the
+    index, disk-cached per (docs_dup stamp, code token) — the
     STORED-INDEX shape (the docs_incremental_dedup precedent: a band
     index is a production artifact you persist once and probe, exactly
     like the cached PQ codebooks). Batch-side the signatures come from
@@ -494,14 +495,12 @@ def cached_band_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SPARK_GRAFT_FRAME_CACHE=cold`` bypasses, exposing the honest
     one-pass derivation cost."""
     from ..operators.dedup import (
-        BANDS,
         NUM_HASHES,
-        SHINGLE_WORDS,
         band_keys,
         exploded_shingles,
         minhash_signatures_agg,
     )
-    from ..plans.training_data import cached_frame, norm_text
+    from ..plans.training_data import norm_text
 
     src = os.path.join(fixture_dir_for(sf_dir), "docs_dup.parquet")
 
@@ -523,7 +522,6 @@ def cached_band_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dedup",
         "band_rows",
         src,
-        f"v1-{NUM_HASHES}-{BANDS}-{SHINGLE_WORDS}",
         build,
     )
 

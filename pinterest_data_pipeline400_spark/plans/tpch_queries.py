@@ -403,6 +403,9 @@ BUCKETS = 8
 )
 def bucketed_join_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
+    import re
+
+    from ..cache import generation_dir
 
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     specs = {
@@ -414,44 +417,32 @@ def bucketed_join_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     }
     names = {}
     for tbl, (ddl_cols, key, select) in specs.items():
-        # The bucketed COPY is cached per fixture CONTENT (source
-        # mtime+size folded into the location, same invalidation rule as
-        # events_queries._partitioned_events_dir): a bucketed layout
-        # exists to be written once and joined against many times — the
-        # whole point of the operator — so only the metastore
-        # registration is per-call, not the table rewrite.
+        # The bucketed copy is a cache generation: a bucketed layout
+        # exists to be written once and joined against many times, so
+        # only the metastore registration is per call. The files are
+        # written through a throwaway external table at the staging
+        # path (DROP TABLE leaves an external table's files), then the
+        # named table is registered over the published location.
         src = os.path.join(sf_dir, f"{tbl}.parquet")
-        st = os.stat(src)
-        stamp = f"{int(st.st_mtime_ns)}_{st.st_size}"
-        name = f"sg_bucketed_{tbl}_{sf_name.replace('.', '_')}"
-        names[tbl] = name
-        from ..session import SCRATCH_ROOT
-
-        loc = os.path.join(SCRATCH_ROOT, "bucketed", sf_name, f"{tbl}_{stamp}")
-        marker = os.path.join(loc, "_SUCCESS")
-        if not os.path.exists(marker):
-            # prune prior fixture generations' table data (DROP TABLE
-            # on an EXTERNAL location leaves the files behind);
-            # grace-aged so a session pinned to the old stamp drains
-            from ..session import prune_stale_siblings
-
-            prune_stale_siblings(
-                os.path.join(SCRATCH_ROOT, "bucketed", sf_name, f"{tbl}_*"),
-                keep=loc,
-            )
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.sql(
-            f"CREATE TABLE {name} ({ddl_cols}) USING PARQUET "
-            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {BUCKETS} BUCKETS "
-            f"LOCATION '{loc}'"
+        table = (
+            f"({ddl_cols}) USING PARQUET CLUSTERED BY ({key}) "
+            f"SORTED BY ({key}) INTO {BUCKETS} BUCKETS"
         )
-        if not os.path.exists(marker):
-            spark.sql(
-                f"INSERT OVERWRITE TABLE {name} " + select.format(p=src)
-            )
-        from ..session import mark_generation_used
 
-        mark_generation_used(loc)  # grace-prune ages from last use
+        def write(d: str) -> None:
+            staging = "sg_staging_" + re.sub(r"\W", "_", os.path.basename(d))
+            spark.sql(f"CREATE TABLE {staging} {table} LOCATION '{d}'")
+            try:
+                spark.sql(
+                    f"INSERT OVERWRITE TABLE {staging} " + select.format(p=src)
+                )
+            finally:
+                spark.sql(f"DROP TABLE {staging}")
+
+        loc = generation_dir(sf_dir, "bucketed", tbl, [src], write)
+        names[tbl] = f"sg_bucketed_{tbl}_{sf_name.replace('.', '_')}"
+        spark.sql(f"DROP TABLE IF EXISTS {names[tbl]}")
+        spark.sql(f"CREATE TABLE {names[tbl]} {table} LOCATION '{loc}'")
 
     orders = spark.table(names["orders"]).hint("merge")
     customer = spark.table(names["customer"])

@@ -32,6 +32,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import cached_frame
 from ..generator import ensure_fixtures, fixture_dir_for
 from ..operators.dedup import (
     EMB_BAND_BITS_WIDE as _dd_EMB_BAND_BITS_WIDE,
@@ -1505,108 +1506,6 @@ def docs_dup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_dup_pairs(normed)
 
 
-def _spine_code_version() -> str:
-    """Code-version token folded into every spine-cache stamp: a change
-    to the minhash/banding constants (or this format tag) must MISS the
-    cache, not silently serve frames computed under the old logic
-    against a freshly-regenerated oracle (ADVICE r6). Bump ``v1`` on
-    any semantic change to the cached builds."""
-    from ..operators import dedup as _dd
-
-    return (
-        f"v1-{_dd.NUM_HASHES}-{_dd.BANDS}-{_dd.ROWS_PER_BAND}-"
-        f"{_dd.SHINGLE_WORDS}-{_dd.DEFAULT_TAU}"
-    )
-
-
-def cached_frame(
-    spark: SparkSession,
-    sf_dir: str,
-    family: str,
-    name: str,
-    src_path: str,
-    version: str,
-    build,
-) -> DataFrame:
-    """Generic content-stamped disk cache for an expensive intermediate
-    frame shared by several registry entries. Keyed by the source
-    file's content stamp (mtime+size — the derived-layout idiom from
-    events_queries) PLUS a code-version token, so a change to the
-    producing logic misses the cache instead of silently serving frames
-    computed under old constants against a freshly-regenerated oracle
-    (ADVICE r6). Entries stay self-contained — any consumer rebuilds a
-    missing/stale generation — and byte-identical: the cached frame is
-    the deterministic output of the same build, materialized once per
-    (fixture generation, code version).
-
-    Publish is ATOMIC: the build lands in a per-process staging dir and
-    is ``os.rename``d into place (the generator's publish idiom), so
-    two sessions that both see a missing generation cannot interleave
-    part-files under one ``_SUCCESS`` (ADVICE r6); the loser of the
-    rename race just deletes its staging copy. Readers touch the
-    generation dir so grace-age pruning measures from last use.
-
-    ``SPARK_GRAFT_FRAME_CACHE=cold`` bypasses the cache entirely (no
-    read, no publish) and returns the lazy build plan — the bench
-    lane's honesty switch (VERDICT r10 task #4): a cached entry's sf1
-    wall otherwise times one parquet read of this cache, not the
-    operator, and reads as fake sub-linear growth."""
-    from ..session import SCRATCH_ROOT, mark_generation_used, prune_stale_siblings
-
-    if os.environ.get("SPARK_GRAFT_FRAME_CACHE", "") == "cold":
-        return build()
-
-    st = os.stat(src_path)
-    root = os.path.join(
-        SCRATCH_ROOT, family, os.path.basename(os.path.normpath(sf_dir))
-    )
-    stamp = f"{int(st.st_mtime_ns)}_{st.st_size}_{version}"
-    base = os.path.join(root, f"{name}_{stamp}")
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        prune_stale_siblings(os.path.join(root, f"{name}_*"), keep=base)
-        staging = f"{base}.staging.{os.getpid()}"
-        build().write.mode("overwrite").parquet(staging)
-        try:
-            os.rename(staging, base)
-        except OSError:
-            import shutil as _sh
-
-            # Either a concurrent session published first (keep theirs)
-            # or a PARTIAL generation blocks the rename — e.g. an
-            # interrupted prune removed _SUCCESS but left part-files,
-            # so ENOTEMPTY recurs for every builder and the corrupt dir
-            # would be served forever (ADVICE r7). Only a _SUCCESS-
-            # gated winner is worth yielding to; otherwise clear the
-            # stale dir and retry the publish once.
-            # Re-check _SUCCESS IMMEDIATELY before the rmtree (ADVICE
-            # r8): a concurrent builder can complete its rename between
-            # the failed rename above and this branch, and deleting a
-            # just-published valid generation would transiently fail
-            # its readers. The re-check narrows the window to the
-            # rmtree syscall itself; the retry + final gate below make
-            # the worst case a clear error, not a corrupt serve.
-            if not os.path.exists(os.path.join(base, "_SUCCESS")):
-                _sh.rmtree(base, ignore_errors=True)
-                try:
-                    os.rename(staging, base)
-                except OSError:
-                    pass
-            _sh.rmtree(staging, ignore_errors=True)
-            if not os.path.exists(os.path.join(base, "_SUCCESS")):
-                # Both rename attempts lost AND nobody else published a
-                # complete generation: falling through to
-                # spark.read.parquet would surface an opaque
-                # AnalysisException on a missing/partial path (ADVICE
-                # r8). Fail with the actual story instead.
-                raise RuntimeError(
-                    f"cached_frame publish failed for {base}: both rename "
-                    "attempts lost and no complete generation (_SUCCESS) "
-                    "exists; delete the directory and retry"
-                )
-    mark_generation_used(base)
-    return spark.read.parquet(base)
-
-
 def _spine_cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
     """Disk cache for one stage of the near-dup spine. The minhash pair
     list and its connected-components labels are the two most expensive
@@ -1620,7 +1519,6 @@ def _spine_cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFra
         "dedup_spine",
         name,
         os.path.join(fixture_dir_for(sf_dir), "docs_dup.parquet"),
-        _spine_code_version(),
         build,
     )
 
@@ -3571,26 +3469,17 @@ def docs_dup_containment_lshe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lshe_verified_contain_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, c, n_a, n_b): the LSH-Ensemble detector's exact
     verified-pair frame over the planted containment fixture,
-    disk-cached per (fixture stamp, geometry version) — the
-    stored-index production shape (cached_band_rows precedent): a
-    dedup verdict set is an artifact you materialize once per corpus
-    generation and let every gauge/report consume. The version token
-    carries the sketch geometry so a constant change misses the cache
-    instead of serving stale pairs.
+    disk-cached per (fixture stamp, code token) — the stored-index
+    production shape (cached_band_rows precedent): a dedup verdict set
+    is an artifact you materialize once per corpus generation and let
+    every gauge/report consume.
 
-    r14: built with ``min_containment=DEFAULT_TAU_CONTAINMENT`` — the
-    frame now holds only the pairs at or above the gauge's own
-    threshold (the sub-tau candidates were dead rows here: the gauge
-    filters at the same tau before use), and the build skips the exact
-    verify for the ~99.96% of band candidates the sound crc32 upper
-    bound excludes. Version token bumped to v2+tau so pre-r14 caches
-    (full candidate frames) miss instead of being re-served."""
-    from ..operators.dedup import (
-        DEFAULT_TAU_CONTAINMENT,
-        LSHE_BANDS,
-        SHINGLE_WORDS,
-        lshe_verified_pairs,
-    )
+    Built with ``min_containment=DEFAULT_TAU_CONTAINMENT``: the frame
+    holds only the pairs at or above the gauge's own threshold (the
+    sub-tau candidates were dead rows here: the gauge filters at the
+    same tau before use), and the build skips the exact verify for the
+    ~99.96% of band candidates the sound crc32 upper bound excludes."""
+    from ..operators.dedup import DEFAULT_TAU_CONTAINMENT, lshe_verified_pairs
 
     src = os.path.join(fixture_dir_for(sf_dir), "docs_contain.parquet")
 
@@ -3607,7 +3496,6 @@ def _lshe_verified_contain_cached(spark: SparkSession, sf_dir: str) -> DataFrame
         "dedup",
         "lshe_verified_contain",
         src,
-        f"v2-{LSHE_BANDS}-{SHINGLE_WORDS}-{DEFAULT_TAU_CONTAINMENT}",
         build,
     )
 
@@ -4347,14 +4235,6 @@ def _pq_trained_codebook(subs: DataFrame) -> DataFrame:
     return cb
 
 
-def _pq_code_version() -> str:
-    """Code-version token for the trained-codebook cache: any change to
-    the PQ geometry or the training loop must MISS the cache (the
-    _spine_code_version rule). Bump ``v1`` on semantic changes to
-    _pq_trained_codebook itself."""
-    return f"v1-{PQ_SUBS}-{PQ_SUB_DIM}-{PQ_CODEBOOK_N}-{PQ_TRAIN_ITERS}"
-
-
 def cached_pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Lloyd-trained PQ codebook, disk-cached per (embeddings
     stamp, code version) — VERDICT r7: the 3-round training loop was
@@ -4374,7 +4254,6 @@ def cached_pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pq_codebook",
         "trained_cb",
         os.path.join(sf_dir, "embeddings.parquet"),
-        _pq_code_version(),
         build,
     )
 
@@ -6402,7 +6281,6 @@ def emb_top_pc_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pca",
         "top_pc",
         os.path.join(sf_dir, "embeddings.parquet"),
-        f"v1-{PC_POWER_ROUNDS}-{PC_DIMS}-{PC_V0_MICRO}",
         build,
     ).orderBy("dim")
 
@@ -7108,7 +6986,6 @@ def cached_lloyd_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kmeans",
         "lloyd_centroids",
         os.path.join(sf_dir, "embeddings.parquet"),
-        f"v1-{K_CLUSTERS}-{LLOYD_ITERS}",
         build,
     )
 
@@ -7528,7 +7405,6 @@ def cached_residual_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFr
         "pq_codebook",
         "resid_trained_cb",
         os.path.join(sf_dir, "embeddings.parquet"),
-        f"rv1-{K_CLUSTERS}-{LLOYD_ITERS}-{_pq_code_version()}",
         build,
     )
 

@@ -238,59 +238,12 @@ STREAM_STATE_PARTITIONS = int(
 #: to exactly that). Override via env for genuinely large replays.
 STREAM_DRAIN_TIMEOUT_SEC = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "60"))
 
-#: One scratch root for every module that materializes derived
-#: on-disk layouts (format round trips, partitioned/z-ordered
-#: copies, per-file media trees). A single definition: changing it
-#: (e.g. to honor TMPDIR) cannot leave another module writing to
-#: the old location.
+#: One scratch root for every module that writes derived data: the
+#: disk cache's generations (``cache.py``), format round trips and
+#: streaming work dirs. A single definition: changing it (e.g. to
+#: honor TMPDIR) cannot leave another module writing to the old
+#: location.
 SCRATCH_ROOT = os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/spark_graft_formats")
-
-#: Grace age before a prior-generation derived-cache dir is pruned. A
-#: concurrent session pinned to the previous fixture stamp may still be
-#: mid-scan on the old tree; deleting it under that reader turns a disk
-#: leak into a cross-session query failure (ADVICE r5). Regeneration
-#: already makes the old stamp unreachable for NEW readers, so pruning
-#: can safely wait out in-flight ones.
-PRUNE_GRACE_SEC = int(os.environ.get("SPARK_GRAFT_PRUNE_GRACE_SEC", "600"))
-
-
-def mark_generation_used(path: str) -> None:
-    """Record "a reader just opened this generation" by bumping the
-    dir's mtime. :func:`prune_stale_siblings` ages generations by
-    mtime; without this touch a long scan over a generation *written*
-    longer than :data:`PRUNE_GRACE_SEC` ago could have the tree pruned
-    underneath it by a concurrent rebuild (ADVICE r6 — write time is
-    not last-use time). Callers touch at reader open; best-effort."""
-    try:
-        os.utime(path, None)
-    except OSError:
-        pass
-
-
-def prune_stale_siblings(pattern: str, keep: str) -> None:
-    """Delete content-stamped sibling cache dirs matching the glob
-    ``pattern``, except ``keep`` (the generation being built) and
-    except generations used within :data:`PRUNE_GRACE_SEC` — the one
-    shared implementation of the prior-generation cleanup every
-    derived-layout builder (format round trips, media trees, bucketed
-    tables, z-ordered copies) previously hand-rolled with an immediate,
-    reader-unsafe ``rmtree``. "Used" = dir mtime, which readers bump
-    via :func:`mark_generation_used` at open, so the grace window
-    measures from last read, not last write."""
-    import glob as _glob
-    import shutil as _sh
-    import time as _time
-
-    now = _time.time()
-    for stale in _glob.glob(pattern):
-        if stale == keep:
-            continue
-        try:
-            age = now - os.path.getmtime(stale)
-        except OSError:
-            continue  # vanished concurrently — nothing to prune
-        if age > PRUNE_GRACE_SEC:
-            _sh.rmtree(stale, ignore_errors=True)
 
 
 @contextmanager
