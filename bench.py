@@ -1,109 +1,75 @@
-"""Benchmark harness: run the engine's registered queries at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line:
+"""The engine's measurement harness: time registered entries and split
+each wall into Spark's layers.
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    python bench.py                                   # --lane sweep
+    python bench.py --lane scale [sf0.1 sf1 | sf1 sf10]
+    python bench.py --lane profile ENTRY [ENTRY ...] [--out-dir DIR]
 
-Methodology:
-  * ``value`` is the total of the nine stable tpch-analog headline
-    queries (q1..q8) — the same set every round, so round-over-round
-    regression comparisons are apples-to-apples. Per-query seconds for
-    EVERY registered entry (pinterest pipelines, streaming, training
-    data) are reported under "queries".
-  * One untimed warm-up pass (JVM + parquet footers + codegen) before
-    any timing; pinterest fixtures are pre-generated so one-time
-    fixture synthesis never lands inside a query's wall clock.
-  * Plans are materialized through the `noop` write sink — the full
-    physical plan executes (no Catalyst pruning of the final project,
-    which `count()` would allow) without driver-side row transfer.
-  * Steady-state re-measure (VERDICT r11 task #1): EVERY entry is
-    timed twice and the MINIMUM reported; the streaming family (any
-    name containing "stream") is timed three times and the MEDIAN
-    reported — trigger/drain scheduling makes a streaming wall
-    bimodal, where min-of-2 under-reports and a single sample flags
-    phantom regressions. A single alphabetical pass makes each heavy
-    query's GC / RDD-cleanup / stream-maintenance backlog land in its
-    successor's wall clock (measured: 2-3x inflation on the query
-    after a streaming entry); repeated timing reports the engine, not
-    the neighbor. Per-entry spread (max-min across runs) is recorded
-    under "spread" so an artifact carries its own noise estimate.
-    ``SPARK_GRAFT_BENCH_RUNS`` overrides the run count for ALL entries
-    (set 1 for the expensive sf1 lane where the sweep itself is the
-    cost).
-  * Load gate (VERDICT r11 task #1): when the 1-minute loadavg at
-    sweep START exceeds 1.0 the host was demonstrably busy before any
-    work began — regression flags from such a run are host noise by
-    construction (r8/r9/r11 all re-litigated exactly this). A dirty
-    run emits "context_dirty": true, reports would-be flags under
-    "regressions_suppressed" (never "regressions"), and does NOT
-    overwrite the quiet baseline BENCH_FULL.json (it writes
-    BENCH_FULL_DIRTY.json beside it instead).
-  * Calibration gate (round 12, reworked round 13 per ADVICE):
-    loadavg only catches CONCURRENT load; a sandboxed host can also be
-    uniformly slower for a whole sweep (measured same-day: two clean
-    back-to-back runs, median per-entry ratio 1.11x, thirteen ~1.5x
-    flags on unrelated 1-2 s entries). A fixed CPU-bound probe
-    (bit_xor of xxhash64 over 4B rows, 32 tasks — ~0.8 s, ~4%
-    intra-session spread) is timed TWICE — once after the warm-ups
-    and once after the sweep — and recorded as
-    context.calibration_sec / calibration_end_sec. The drift ratio is
-    max(start, end) / baseline calibration. Round-13 semantics
-    (ADVICE r12 #1 — the old wholesale suppression was a ratchet that
-    could hide real regressions behind permanent drift):
-      - drift > +15%: per-entry walls are NORMALIZED by the ratio
-        before the regression compare, so flags that survive
-        normalization are still emitted (they represent real
-        slowdowns beyond uniform host speed). The run is still parked
-        (not baseline-eligible) because its raw walls would skew the
-        next compare.
-      - after 3 CONSECUTIVE drift-parked runs the current run is
-        promoted to baseline anyway ("baseline_refresh":
-        "drift_streak") — the host has demonstrably changed speed and
-        the old reference is stale; the parked artifact carries the
-        streak counter.
-      - the gate stays one-sided: a faster-than-baseline host never
-        dirties the run or inflates flags (ratio is clamped >= 1 for
-        normalization).
-    Loadavg override (round 12, tightened round 13 per ADVICE #4): a
-    calibration at or under the baseline's overrides the loadavg
-    gate — but now BOTH the start and end probes must be at-or-under
-    (<= 1.05x), so load arriving mid-sweep can no longer slip past a
-    single quiet start sample.
-  * Baseline hygiene (ADVICE r12 #2): a previous artifact with
-    context_dirty must never silently serve as the trusted reference;
-    bench.py now warns on stderr and records "baseline_was_dirty" in
-    the output when that happens, and a clean current run overwrites
-    it (re-promotion happens naturally on the next quiet sweep).
-  * Baseline lane (VERDICT r11 task #2): the two deliberately-kept
-    recall-1.0 posting-join baselines (docs_dup_containment,
-    docs_dup_ngram_pairs — superseded at scale by their signature
-    twins) are SKIPPED unless ``SPARK_GRAFT_BASELINE_LANE=1``: they
-    are documented-degenerate at sf1 (63-73 s, super-linear) and were
-    the sole reason for the 16 GB driver heap. Their registry entries
-    and oracles remain — correctness still certifies them.
-  * Bench runs in the SCALE configuration: percentile_approx sketches
-    (``SPARK_GRAFT_PERCENTILE_MODE=approx``) — the 100 TB path. The
-    driver's correctness gate imports with a default env and therefore
-    measures the exact/oracle mode; flip with the env var.
+Every lane times what the DuckDB oracle certifies: the exact plans (the
+three ``*_MODE`` switches unset) with the disk frame cache bypassed, set
+as ``perfbench/run.py:set_env`` sets them, so an entry backed by the
+cache is timed building its frame, not reading a stored one. Every lane
+runs one session on ``local[$SPARK_GRAFT_CPUS]`` with Spark's event log
+on, pays the same untimed warm-ups, and times each entry through
+:meth:`Bench.measure`: one call materialised through the ``noop`` sink
+(the whole plan runs and nothing is shipped to the driver), its wall,
+the CPU of the whole process tree (this process, the JVM and its Python
+workers) and the classes the codegen cache compiled. Each call's jobs
+carry the entry's name as their job group. When the session stops, each
+call's span is joined to the event log (``perfbench.tracing``) for its
+time inside stages, jobs, tasks, shuffle and spill bytes; the rest of
+the wall is driver-only time (analysis, planning, scheduling, Python).
+
+sweep    every registered entry at ``$SPARK_GRAFT_SF_DIR`` (default
+         /root/testdata/sf0.1) except SWEEP_SKIP. An entry is timed
+         twice and its faster run kept, because the second run can only
+         add a neighbour's garbage-collection backlog; an entry whose
+         name contains ``stream`` is timed three times and its median
+         kept, because drain scheduling makes its wall bimodal. At
+         sf >= 1 every entry runs once: there the sweep itself is the
+         cost. ``value`` is the total of the nine HEADLINE queries. The
+         artifact ``BENCH_FULL_sf<sf>_c<cpus>_<mode>.json`` is named by
+         the run's key, and an entry is flagged when it ran more than
+         1.5x and 0.3 s slower than in the previous artifact of the same
+         key (sub-second entries swing 1.3-1.7x from garbage collection
+         alone). The last line of stdout is a compact summary short
+         enough for a caller that keeps only the output's last 2000
+         characters.
+scale    the two sfs of a decade, sf0.1 sf1 (default) or sf1 sf10, each
+         SCALE_ENTRIES entry timed once per sf, and its growth
+         t(large) / t(small); growth over GROWTH_CEILING for ten times
+         the data is listed. sf1 and sf10 inputs are replicated from
+         the scale below on first use (``scale_fixtures``).
+profile  the named entries, each timed twice, printing every field of
+         both runs plus ``child_processes`` (processes started on the
+         whole host during the run, so use an otherwise idle host) and
+         ``worker_cpu_s`` (CPU of the JVM's live descendants: the Python
+         worker daemon and its workers). Each entry's formatted plan is
+         written to ``<out-dir>/<entry>.txt``. A run that still compiles
+         classes the second time means the codegen cache thrashes.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-# Scale path by default for bench (see module docstring); respect an
-# explicit caller override.
-os.environ.setdefault("SPARK_GRAFT_PERCENTILE_MODE", "approx")
-os.environ.setdefault("SPARK_GRAFT_DISTINCT_MODE", "approx")
-os.environ.setdefault("SPARK_GRAFT_TOPK_MODE", "approx")
+from perfbench.run import APPROX_VARS, cpu_ticks, steal_pct  # noqa: E402
+from perfbench.stats import tree_cpu_s  # noqa: E402
+from perfbench.tracing import event_log_file, exec_stats, read_event_log  # noqa: E402
 
-from pinterest_data_pipeline400_spark.generator import ensure_fixtures  # noqa: E402
-from pinterest_data_pipeline400_spark.session import build_session  # noqa: E402
+#: Plans a run times. Only exact runs are made; the committed 32-core
+#: artifacts of the sketch plans keep ``approx`` in their names.
+MODE = "exact"
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 HEADLINE = [
     "q1_top_priority_per_nation",
@@ -117,385 +83,394 @@ HEADLINE = [
     "q8_median_acctbal_by_year_segment",
 ]
 
+#: The two recall-1.0 posting-join baselines, registered for the oracle
+#: but super-linear in the corpus (63-73 s at sf1 on 32 cores) and
+#: superseded at scale by their signature twins. ``--lane profile``
+#: still times them.
+SWEEP_SKIP = ("docs_dup_containment", "docs_dup_ngram_pairs")
 
-def _materialize(df) -> None:
-    """Run the FULL plan: noop sink executes everything, ships nothing."""
+#: The entries each decade times, chosen to cover the spines whose
+#: growth carries the design's scale claims: near-dup candidates and
+#: clusters, ANN, fact-table rollups, windows, the composed corpus
+#: pipeline, media decode and the streaming near-dup verdict.
+SCALE_ENTRIES = {
+    ("sf0.1", "sf1"): [
+        "docs_dup_minhash_pairs",
+        "docs_dup_clusters",
+        "emb_knn_lsh",
+        "emb_knn_bruteforce",
+        "q_pricing_summary",
+        "q1_top_priority_per_nation",
+        "orders_rolling_90d_spend",
+        "ev_sessionization",
+        "docs_corpus_pipeline",
+        "multimodal_decode_png",
+        "multimodal_image_neardup",
+        "multimodal_audio_neardup",
+        "stream_neardup_dedup",
+    ],
+    # the sweep itself is the cost at sf10, so only the spines whose
+    # growth exponents carry the 100 TB story
+    ("sf1", "sf10"): [
+        "docs_dup_containment_sig",
+        "emb_neardup_pairs",
+        "docs_dup_substring_spans",
+        "stream_neardup_dedup",
+        "q_pricing_summary",
+    ],
+}
+#: Linear work plus constant overheads stays under this growth for ten
+#: times the data.
+GROWTH_CEILING = 12.0
+
+#: A regression flag needs both bounds.
+FLAG_RATIO = 1.5
+FLAG_ABS_S = 0.3
+
+
+def regressions(timings: dict, key: dict, baseline: dict) -> dict[str, list[float]]:
+    """{entry: [baseline s, now s]} for each entry more than FLAG_RATIO
+    times and FLAG_ABS_S slower than in ``baseline``. Walls of another
+    sf, core count or plan mode are not comparable, so a baseline with
+    another key flags nothing."""
+    if baseline.get("key") != key:
+        return {}
+    prev = baseline.get("queries", {})
+    out = {}
+    for name, dt in timings.items():
+        p = prev.get(name)
+        if isinstance(p, (int, float)) and dt > FLAG_RATIO * p and dt - p > FLAG_ABS_S:
+            out[name] = [p, dt]
+    return out
+
+
+def compact_line(out: dict) -> str:
+    """The sweep's summary line, printed last: the headline total with
+    its nine per-query seconds and the counts a caller checks."""
+    return json.dumps({
+        "metric": out["metric"],
+        "value": out["value"],
+        "unit": out["unit"],
+        "sf": out["key"]["sf"],
+        "headline_complete": out["headline_complete"],
+        "n_entries": len(out["queries"]),
+        "n_errors": len(out["errors"]),
+        "n_regressions": len(out["regressions"]),
+        "per_query": {n: out["queries"].get(n) for n in HEADLINE},
+        "cpus": out["key"]["cpus"],
+        "mode": out["key"]["mode"],
+    })
+
+
+def forks_so_far() -> int:
+    """Processes started on the host since boot (``/proc/stat``)."""
+    with open("/proc/stat") as fh:
+        for line in fh:
+            if line.startswith("processes "):
+                return int(line.split()[1])
+    return 0
+
+
+def worker_cpu_s(jvm_pid: int) -> float:
+    """CPU seconds of the JVM's live descendants: its process tree less
+    the JVM itself (and the short commands it forked and reaped)."""
+    with open(f"/proc/{jvm_pid}/stat") as fh:
+        ticks = sum(int(v) for v in fh.read().rsplit(")", 1)[1].split()[11:15])
+    return tree_cpu_s(jvm_pid) - ticks / os.sysconf("SC_CLK_TCK")
+
+
+def sf_dir_for(sf_name: str) -> str:
+    """The driver tables of ``sf_name`` with the engine's fixtures of the
+    same scale in place, built once, outside every timer."""
+    from pinterest_data_pipeline400_spark import scale_fixtures
+    from pinterest_data_pipeline400_spark.generator import ensure_fixtures
+
+    if sf_name == "sf1":
+        ensure_fixtures("sf1")
+        return scale_fixtures.ensure_sf1()
+    if sf_name == "sf10":
+        # replicated from sf1: generating sf10's media payloads would
+        # dominate the lane
+        scale_fixtures.ensure_sf10_fixtures()
+        return scale_fixtures.ensure_sf10()
+    ensure_fixtures(sf_name)
+    return os.path.join(os.path.dirname(DEFAULT_SF_DIR), sf_name)
+
+
+def env_sf_dir() -> tuple[str, str]:
+    """``$SPARK_GRAFT_SF_DIR`` and its scale label (``0.1`` for
+    ``.../sf0.1``), with its inputs prepared by :func:`sf_dir_for`."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    sf_name = os.path.basename(os.path.normpath(sf_dir))
+    if sf_name.startswith("sf"):
+        sf_dir_for(sf_name)
+    return sf_dir, sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+
+
+def materialize(df) -> None:
+    """Run the whole plan: the noop sink executes everything and ships
+    nothing; ``count()`` would let Catalyst prune the final projection."""
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> None:
-    # Environment snapshot BEFORE any work: the end-of-run loadavg is
-    # dominated by this very sweep (32 threads for ~10 min), so only
-    # the start-of-run figure can testify that the MACHINE was quiet
-    # when the measurement began (VERDICT r7 task #3).
-    try:
-        la_start = round(os.getloadavg()[0], 2)
-    except OSError:
-        la_start = None
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    if sf_name.startswith("sf"):
-        ensure_fixtures(sf_name)  # one-time synthesis outside the timers
-    spark = build_session(app_name="bench")
+class Bench:
+    """One session with the event log on, and every record it timed."""
 
-    import __spark_entry__ as entrymod
+    def __init__(self, app: str):
+        for v in APPROX_VARS:
+            os.environ.pop(v, None)
+        os.environ["SPARK_GRAFT_FRAME_CACHE"] = "cold"
+        from pinterest_data_pipeline400_spark.session import DEFAULT_CPUS, build_session
 
-    qfns = entrymod.queries()
+        self.cpus = DEFAULT_CPUS
+        self.ticks0 = cpu_ticks()
+        self.log_dir = tempfile.mkdtemp(prefix="bench_eventlog_")
+        self.spark = build_session(app_name=app, extra_conf={
+            # the standard library reads only a plain, single-file log
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": "file://" + self.log_dir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        })
+        self.jvm_pid = self.spark.sparkContext._gateway.proc.pid
+        import __spark_entry__
 
-    # Untimed warm-up: JVM, parquet footers, whole-stage codegen caches.
-    try:
-        _materialize(qfns[HEADLINE[0]](spark, sf_dir))
-    except Exception:  # noqa: BLE001 — warm-up only; the sweep still times it
-        pass
-    # ... and the Python worker daemon: the first Arrow/mapInPandas stage
-    # in a session pays the worker spin-up (~seconds); without this the
-    # alphabetically-first Python-boundary query absorbs it.
-    _materialize(spark.range(1).mapInPandas(lambda it: it, "id long"))
-    # ... and the Structured Streaming machinery: the first streaming
-    # query in a session spins up the micro-batch thread pools, state
-    # store maintenance pool, and (for the RocksDB entries) loads the
-    # native RocksDB library — measured 1.5-3.7 s absorbed by whichever
-    # streaming entry happens to run first (r4's artifact showed the
-    # stateful entries 1.4-1.6x slower than r3 purely from sweep
-    # position). One untimed availableNow stateful drain with the
-    # RocksDB provider pays all of it outside the timers.
-    try:
-        import shutil
-        import tempfile
+        self.queries = __spark_entry__.queries()
+        self.records: list[dict] = []
 
-        _ckpt = tempfile.mkdtemp(prefix="bench_stream_warmup_")
-        _conf = "spark.sql.streaming.stateStore.providerClass"
-        _prev = spark.conf.get(_conf, None)
+    def warm_up(self, sf_dir: str) -> None:
+        """Pay, outside every timer, what the first entry of a session
+        would otherwise absorb: JVM class loading, parquet footers and
+        codegen; the Python worker daemon's spin-up; and the streaming
+        machinery (micro-batch pools, state-store maintenance, the
+        native RocksDB library), which cost whichever stateful entry ran
+        first 1.5-3.7 s."""
         from pinterest_data_pipeline400_spark.streaming import ROCKSDB_PROVIDER
 
-        spark.conf.set(_conf, ROCKSDB_PROVIDER)
-        _q = None
+        spark = self.spark
         try:
-            _q = (
-                spark.readStream.format("rate")
-                .option("rowsPerSecond", "1")
-                .load()
-                .groupBy("value")
-                .count()
-                .writeStream.format("noop")
-                .outputMode("update")
-                .option("checkpointLocation", _ckpt)
-                .trigger(availableNow=True)
-                .start()
+            materialize(self.queries[HEADLINE[0]](spark, sf_dir))
+        except Exception:  # noqa: BLE001 — the lane still times it
+            pass
+        materialize(spark.range(1).mapInPandas(lambda it: it, "id long"))
+        ckpt = tempfile.mkdtemp(prefix="bench_stream_warmup_")
+        conf = "spark.sql.streaming.stateStore.providerClass"
+        prev = spark.conf.get(conf, None)
+        spark.conf.set(conf, ROCKSDB_PROVIDER)
+        q = None
+        try:
+            q = (
+                spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+                .groupBy("value").count()
+                .writeStream.format("noop").outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True).start()
             )
-            # On timeout the query would otherwise keep running through
-            # the timed sweep — the exact contamination the warm-up
-            # exists to prevent. Stop it explicitly.
-            if not _q.awaitTermination(60):
-                _q.stop()
+            q.awaitTermination(60)
         finally:
-            if _q is not None and _q.isActive:
-                _q.stop()
-            if _prev is None:
-                spark.conf.unset(_conf)
+            # a query left running would load every timed entry after it
+            if q is not None and q.isActive:
+                q.stop()
+            if prev is None:
+                spark.conf.unset(conf)
             else:
-                spark.conf.set(_conf, _prev)
-            shutil.rmtree(_ckpt, ignore_errors=True)
-    except Exception:  # noqa: BLE001 — warm-up only
-        pass
+                spark.conf.set(conf, prev)
+            shutil.rmtree(ckpt, ignore_errors=True)
 
-    # Calibration probe (module docstring): fixed CPU-bound work, timed
-    # AFTER warm-ups so JVM startup never lands in it; min-of-2 like
-    # every other timing.
-    def _calibrate() -> float:
-        t0 = time.perf_counter()
-        # bit_xor, not sum: xxhash64 longs overflow an ANSI-mode
-        # sum; xor is overflow-free and equally unprunable
-        _materialize(
-            spark.range(0, 4_000_000_000, 1, 32).selectExpr(
-                "bit_xor(xxhash64(id)) AS s"
-            )
-        )
-        return time.perf_counter() - t0
+    def measure(self, name: str, sf_dir: str, procs: bool = False):
+        """Time one call of entry ``name``; returns (record, frame). The
+        record's layer fields are filled in by :meth:`close`. ``procs``
+        adds the profile lane's process counters."""
+        from pinterest_data_pipeline400_spark.session import codegen_compiles
 
-    try:
-        calibration_sec = round(min(_calibrate(), _calibrate()), 4)
-    except Exception:  # noqa: BLE001 — the probe must never kill the sweep
-        calibration_sec = None
-
-    # Opt-in baseline lane (module docstring): the degenerate posting
-    # baselines stay registered (correctness) but out of the default
-    # sweep (perf artifact + OOM exposure).
-    BASELINE_ONLY = {"docs_dup_containment", "docs_dup_ngram_pairs"}
-    baseline_lane = os.environ.get("SPARK_GRAFT_BASELINE_LANE") == "1"
-    # Parse the run-count override ONCE, outside the per-entry guard
-    # (ADVICE r12 #3): a malformed value must degrade to the default
-    # counts with a warning, never kill the sweep mid-loop.
-    runs_override: int | None = None
-    _runs_raw = os.environ.get("SPARK_GRAFT_BENCH_RUNS")
-    if _runs_raw:
+        spark, sc, me = self.spark, self.spark.sparkContext, os.getpid()
+        sc.setJobGroup(name, f"bench {name}")
+        if procs:
+            f0, w0 = forks_so_far(), worker_cpu_s(self.jvm_pid)
+        c0, cpu0 = codegen_compiles(spark), tree_cpu_s(me)
+        t0w, t0 = time.time(), time.perf_counter()
         try:
-            runs_override = max(1, int(_runs_raw))
-        except ValueError:
-            print(
-                f"WARNING: ignoring malformed SPARK_GRAFT_BENCH_RUNS="
-                f"{_runs_raw!r} (not an int); using default run counts",
-                file=sys.stderr,
-            )
-    timings: dict[str, object] = {}
-    spreads: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    skipped: list[str] = []
-    for name in sorted(qfns):
-        if name in BASELINE_ONLY and not baseline_lane:
-            skipped.append(name)
-            continue
-        # min-of-2 default; median-of-3 for the bimodal streaming
-        # family; env override for lanes where the sweep is the cost.
-        n_runs = 3 if "stream" in name else 2
-        if runs_override is not None:
-            n_runs = runs_override
-        # Per-query guard: one broken entry must never take down the
-        # whole bench (round 2 lost its number exactly that way) — the
-        # failure is recorded and the sweep continues.
-        try:
-            samples: list[float] = []
-            for _ in range(n_runs):
-                t0 = time.perf_counter()
-                _materialize(qfns[name](spark, sf_dir))
-                samples.append(time.perf_counter() - t0)
-            samples.sort()
-            # median for n>=3 (robust to one bimodal drain), min for
-            # n==2 (the second run can only ADD its neighbor's backlog)
-            dt = samples[len(samples) // 2] if len(samples) >= 3 else samples[0]
-            timings[name] = round(dt, 4)
-            if len(samples) > 1:
-                spreads[name] = round(samples[-1] - samples[0], 4)
-        except Exception as exc:  # noqa: BLE001 — survey sweep, record + go on
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-    # End-of-sweep calibration probe (ADVICE r12 #4): load arriving
-    # MID-sweep escapes both the start loadavg gate and a single
-    # start-of-sweep probe; a second sample brackets the sweep so the
-    # drift gate and the loadavg override see the whole window.
+            df = self.queries[name](spark, sf_dir)
+            materialize(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        rec = {
+            "wall_s": round(time.perf_counter() - t0, 4),
+            "cpu_s": round(tree_cpu_s(me) - cpu0, 3),
+            "codegen_compiles": codegen_compiles(spark) - c0,
+            "span": (t0w, time.time()),
+        }
+        if procs:
+            rec["child_processes"] = forks_so_far() - f0
+            rec["worker_cpu_s"] = round(worker_cpu_s(self.jvm_pid) - w0, 3) or 0.0
+        self.records.append(rec)
+        return rec, df
+
+    def close(self) -> dict:
+        """Stop the session, which flushes the event log, and join every
+        record's span to it. Returns the run's context."""
+        self.spark.stop()
+        log = read_event_log(event_log_file(self.log_dir))
+        for rec in self.records:
+            st = exec_stats(log, *rec.pop("span"))
+            rec.update({
+                "in_stage_s": round(st.in_stage_s, 4),
+                "driver_only_s": round(rec["wall_s"] - st.in_stage_s, 4),
+                "jobs": st.jobs,
+                "tasks": st.tasks,
+                "shuffle_bytes": st.shuffle_read_bytes + st.shuffle_write_bytes,
+                "spill_bytes": st.spill_bytes,
+            })
+        shutil.rmtree(self.log_dir, ignore_errors=True)
+        return {"nproc": os.cpu_count(), "steal_pct": steal_pct(self.ticks0),
+                "frame_cache": "cold"}
+
+
+def write_artifact(name: str, out: dict) -> None:
+    path = os.path.join(ROOT, name)
     try:
-        calibration_end_sec = round(min(_calibrate(), _calibrate()), 4)
-    except Exception:  # noqa: BLE001 — the probe must never kill the sweep
-        calibration_end_sec = None
-    headline_complete = all(isinstance(timings.get(n), float) for n in HEADLINE)
-    # Load-context marker (VERDICT r6 task #5): r6's committed headline
-    # swung 2.48-4.0 s with identical plans depending on hours-of-JVM
-    # machine warmth. Recording the machine's load state INTO the
-    # committed artifact lets round-over-round deltas be read against
-    # context instead of prose ("was the box busy?"). The JVM itself is
-    # always fresh here (bench builds its own session); the variance
-    # source is machine-level (concurrent JVMs, page cache, CPU load).
-    try:
-        with open("/proc/uptime") as fh:
-            uptime_sec = round(float(fh.read().split()[0]))
-    except OSError:
-        uptime_sec = None
-    try:
-        la1, la5, la15 = (round(x, 2) for x in os.getloadavg())
-    except OSError:
-        la1 = la5 = la15 = None
-    context = {
-        "uptime_sec": uptime_sec,
-        "loadavg_start_1m": la_start,
-        "loadavg_1m": la1,
-        "loadavg_5m": la5,
-        "loadavg_15m": la15,
-        "cpus": os.cpu_count(),
-        "calibration_sec": calibration_sec,
-        "calibration_end_sec": calibration_end_sec,
-    }
-    # A partial headline sum would silently compare apples to oranges
-    # round-over-round (ADVICE r3); publish null instead when any
-    # headline query failed to time.
-    total = (
-        round(sum(timings[n] for n in HEADLINE), 4) if headline_complete else None
-    )
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Per-entry regression gate (VERDICT r6 task #6): diff this run
-    # against the previously-committed BENCH_FULL.json BEFORE
-    # overwriting it. An entry regresses if it is >1.5x slower AND
-    # >0.3 s absolute (both bounds — sub-second entries swing 1.3-1.7x
-    # from GC noise alone; the docs_lsh_tuning_curve 17 s catch that
-    # motivated this gate was found manually in r6). The gate is
-    # advisory output, not a failure: known regressions get triaged in
-    # PERF.md.
-    full_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"),
-    )
-    # Load gate (module docstring): a run that STARTED on a busy host
-    # cannot produce trustworthy per-entry flags — suppress, don't emit.
-    la_dirty = isinstance(la_start, float) and la_start > 1.0
-    context_dirty = la_dirty
-    dirty_reason = "loadavg" if la_dirty else None
-    regressions: dict[str, list[float]] = {}
-    cal_ratio: float | None = None
-    baseline_was_dirty = False
-    drift_streak = 0
-    baseline_refresh: str | None = None
-    try:
-        with open(full_path) as fh:
-            prev_out = json.load(fh)
-        # Baseline hygiene (ADVICE r12 #2): a dirty artifact must not
-        # SILENTLY become the trusted reference. Warn + record; its
-        # timings/calibration are still the best available comparison
-        # until a clean run overwrites it (which a clean current run
-        # does at the write below).
-        if prev_out.get("context_dirty"):
-            baseline_was_dirty = True
-            print(
-                "WARNING: baseline artifact "
-                f"{os.path.basename(full_path)} is context_dirty "
-                f"(reason: {prev_out.get('dirty_reason')}); comparing "
-                "against it anyway — a clean run will re-promote",
-                file=sys.stderr,
-            )
-        prev_cal = prev_out.get("context", {}).get("calibration_sec")
-        cal_samples = [
-            c
-            for c in (calibration_sec, calibration_end_sec)
-            if isinstance(c, float)
-        ]
-        if isinstance(prev_cal, (int, float)) and cal_samples:
-            # Drift ratio uses the WORST (slowest) of the start/end
-            # probes so mid-sweep slowdowns are counted (ADVICE #4).
-            cal_ratio = round(max(cal_samples) / prev_cal, 4)
-            # Calibration gate, ONE-SIDED (module docstring): a host
-            # SLOWER than the baseline's inflates every wall; a FASTER
-            # host only makes surviving flags more credible, so it
-            # never dirties the run.
-            if cal_ratio - 1 > 0.15:
-                context_dirty = True
-                dirty_reason = dirty_reason or "calibration_drift"
-            # ... and a measured-fast probe OVERRIDES the loadavg gate
-            # — but only when BOTH bracketing probes are at-or-under
-            # the baseline's (ADVICE #4): the start probe alone cannot
-            # testify about load that arrived mid-sweep.
-            elif la_dirty and all(c <= prev_cal * 1.05 for c in cal_samples):
-                context_dirty = False
-                dirty_reason = None
-        # cross-SF timings are not comparable — gate only within one SF
-        prev = prev_out.get("queries", {}) if prev_out.get("sf") == sf_val else {}
-        # Normalized compare (ADVICE r12 #1): on a uniformly-slower
-        # host, divide every wall by the calibration ratio BEFORE the
-        # 1.5x/0.3s test. Flags that survive normalization are real
-        # per-entry slowdowns beyond host speed and are EMITTED even on
-        # a drift-parked run; wholesale suppression remains only for
-        # loadavg-dirty runs (live contention is non-uniform, so no
-        # scalar normalization can rescue those flags).
-        norm = max(cal_ratio, 1.0) if isinstance(cal_ratio, float) else 1.0
-        for name, dt in timings.items():
-            p = prev.get(name)
-            if not (isinstance(p, (int, float)) and isinstance(dt, float)):
-                continue
-            dt_n = dt / norm
-            if dt_n > 1.5 * p and dt_n - p > 0.3:
-                regressions[name] = [p, dt] if norm == 1.0 else [
-                    p,
-                    dt,
-                    round(dt_n, 4),
-                ]
-        # Drift-streak baseline refresh (ADVICE r12 #1): the old gate
-        # was a ratchet — a baseline promoted from the day's fastest
-        # host state made every later run "drift-dirty" forever. After
-        # 3 consecutive calibration-drift parks the host has
-        # demonstrably changed speed: promote the current run.
-        if dirty_reason == "calibration_drift" and not la_dirty:
-            dirty_path = full_path.replace(".json", "_DIRTY.json")
-            try:
-                with open(dirty_path) as fh:
-                    prev_dirty = json.load(fh)
-                if prev_dirty.get("dirty_reason") == "calibration_drift":
-                    drift_streak = int(prev_dirty.get("drift_streak", 1))
-            except (OSError, ValueError):
-                pass
-            drift_streak += 1
-            if drift_streak >= 3:
-                context_dirty = False
-                dirty_reason = None
-                baseline_refresh = "drift_streak"
-                drift_streak = 0
-    except (OSError, ValueError):
-        pass  # first run / unreadable previous artifact: no baseline
-    # Flags are SUPPRESSED only on live-contention (loadavg) dirt;
-    # calibration-drift runs emit the normalization survivors — they
-    # represent real slowdowns beyond uniform host speed (ADVICE #1).
-    suppress_flags = context_dirty and dirty_reason == "loadavg"
-    out = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "spread": spreads,
-        "sf": sf_val,
-        "headline_complete": headline_complete,
-        "context": context,
-        "context_dirty": context_dirty,
-        "regressions": {} if suppress_flags else regressions,
-    }
-    if suppress_flags and regressions:
-        out["regressions_suppressed"] = regressions
-    if dirty_reason:
-        out["dirty_reason"] = dirty_reason
-    if isinstance(cal_ratio, float):
-        out["calibration_ratio"] = cal_ratio
-    if drift_streak:
-        out["drift_streak"] = drift_streak
-    if baseline_was_dirty:
-        out["baseline_was_dirty"] = True
-    if baseline_refresh:
-        out["baseline_refresh"] = baseline_refresh
-    if skipped:
-        out["baseline_lane_skipped"] = skipped
-    if errors:
-        out["errors"] = errors
-    # Self-sufficient committed artifact: the driver's BENCH_r{N}.json
-    # keeps only a tail of stdout, which truncates the front half of the
-    # alphabet's per-entry timings (VERDICT r5 nit). Write the COMPLETE
-    # map to a file too, so per-entry round-over-round deltas never
-    # depend on prose. Path overridable for ad-hoc runs.
-    # A dirty run must NOT become next round's baseline (its inflated
-    # walls would mask real regressions on the following quiet run):
-    # park it beside the baseline instead.
-    write_path = (
-        full_path.replace(".json", "_DIRTY.json") if context_dirty else full_path
-    )
-    try:
-        with open(write_path, "w") as fh:
+        with open(path, "w") as fh:
             json.dump(out, fh, indent=1, sort_keys=True)
             fh.write("\n")
-    except OSError:
-        pass  # read-only checkout: stdout still carries everything
-    print(json.dumps(out))
-    if regressions and not suppress_flags:
-        # gate output (one line per offender, before the final summary
-        # so the compact line stays LAST for the driver's tail window)
-        for name, vals in sorted(regressions.items()):
-            p, dt = vals[0], vals[1]
-            norm_note = f" (norm {vals[2]:.2f}s)" if len(vals) > 2 else ""
-            print(
-                f"REGRESSION {name}: {p:.2f}s -> {dt:.2f}s "
-                f"({dt / p:.2f}x){norm_note}",
-                file=sys.stderr,
-            )
-    # The driver's artifact keeps only the LAST ~2000 chars of stdout;
-    # the full line above overflows that, so BENCH_r03 recorded
-    # "parsed: null" (VERDICT r3 task #2). Emit a compact summary line
-    # LAST — guaranteed to fit the tail window and parse on its own.
-    print(json.dumps({
+        print(f"wrote {path}", file=sys.stderr)
+    except OSError:  # read-only checkout: stdout carries the artifact
+        print(json.dumps(out))
+
+
+def sweep(args) -> None:
+    sf_dir, sf = env_sf_dir()
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    b = Bench("bench")
+    b.warm_up(sf_dir)
+    key = {"sf": sf_val, "cpus": b.cpus, "mode": MODE}
+    one_run = isinstance(sf_val, float) and sf_val >= 1
+    timings: dict[str, float] = {}
+    spreads: dict[str, float] = {}
+    entries: dict[str, dict] = {}
+    errors: dict[str, str] = {}
+    for name in sorted(b.queries):
+        if name in SWEEP_SKIP:
+            continue
+        n_runs = 1 if one_run else 3 if "stream" in name else 2
+        try:
+            runs = sorted((b.measure(name, sf_dir)[0] for _ in range(n_runs)),
+                          key=lambda r: r["wall_s"])
+        except Exception as exc:  # noqa: BLE001 — one broken entry must not end the sweep
+            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+            print(f"{name} ERROR {errors[name][:120]}", file=sys.stderr)
+            continue
+        entries[name] = runs[len(runs) // 2] if n_runs >= 3 else runs[0]
+        timings[name] = entries[name]["wall_s"]
+        if n_runs > 1:
+            spreads[name] = round(runs[-1]["wall_s"] - runs[0]["wall_s"], 4)
+        print(f"{name} {timings[name]:.3f}s", file=sys.stderr)
+    context = b.close()
+    headline_complete = all(n in timings for n in HEADLINE)
+    artifact = f"BENCH_FULL_sf{sf}_c{b.cpus}_{MODE}.json"
+    try:
+        with open(os.path.join(ROOT, artifact)) as fh:
+            baseline = json.load(fh)
+    except (OSError, ValueError):
+        baseline = {}  # first run with this key
+    out = {
         "metric": "headline_queries_total",
-        "value": total,
+        # a partial headline sum would compare different query sets
+        "value": round(sum(timings[n] for n in HEADLINE), 4) if headline_complete else None,
         "unit": "sec",
-        "sf": sf_val,
+        "key": key,
         "headline_complete": headline_complete,
-        "n_entries": len(timings),
-        "n_errors": len(errors),
-        "n_regressions": 0 if suppress_flags else len(regressions),
-        "context_dirty": context_dirty,
-        "loadavg_1m": la1,
-        "uptime_sec": uptime_sec,
-    }))
-    spark.stop()
+        "queries": timings,
+        "spread": spreads,
+        "entries": entries,
+        "skipped": list(SWEEP_SKIP),
+        "errors": errors,
+        "regressions": regressions(timings, key, baseline),
+        "context": context,
+    }
+    write_artifact(artifact, out)
+    for name, (p, dt) in sorted(out["regressions"].items()):
+        print(f"REGRESSION {name}: {p:.2f}s -> {dt:.2f}s ({dt / p:.2f}x)", file=sys.stderr)
+    print(compact_line(out))
+
+
+def scale(args) -> None:
+    sfs = tuple(args.targets) or ("sf0.1", "sf1")
+    if sfs not in SCALE_ENTRIES:
+        sys.exit(f"--lane scale takes one of the decades {sorted(SCALE_ENTRIES)}")
+    dirs = {sf: sf_dir_for(sf) for sf in sfs}
+    b = Bench("bench_scale")
+    b.warm_up(dirs[sfs[0]])
+    recs: dict[str, dict[str, dict]] = {sf: {} for sf in sfs}
+    errors: dict[str, str] = {}
+    for sf in sfs:
+        for name in SCALE_ENTRIES[sfs]:
+            try:
+                recs[sf][name] = b.measure(name, dirs[sf])[0]
+            except Exception as exc:  # noqa: BLE001 — time the rest
+                errors[f"{name}@{sf}"] = f"{type(exc).__name__}: {exc}"[:500]
+                continue
+            print(f"{name}@{sf} {recs[sf][name]['wall_s']:.3f}s", file=sys.stderr)
+    context = b.close()
+    small, large = sfs
+    entries, growth = {}, {}
+    for name in SCALE_ENTRIES[sfs]:
+        entries[name] = {sf: recs[sf].get(name) for sf in sfs}
+        if recs[small].get(name) and recs[large].get(name):
+            growth[name] = round(recs[large][name]["wall_s"] / recs[small][name]["wall_s"], 2)
+    out = {
+        "metric": "family_growth",
+        "key": {"sfs": list(sfs), "cpus": b.cpus, "mode": MODE},
+        "growth_ceiling": GROWTH_CEILING,
+        "growth": growth,
+        "over_ceiling": sorted(n for n, g in growth.items() if g > GROWTH_CEILING),
+        "entries": entries,
+        "errors": errors,
+        "context": context,
+    }
+    write_artifact(f"BENCH_SCALE_{small}_{large}_c{b.cpus}_{MODE}.json", out)
+    print(json.dumps({k: out[k] for k in ("metric", "key", "growth", "over_ceiling")}
+                     | {"n_errors": len(errors)}))
+
+
+def profile(args) -> None:
+    if not args.targets:
+        sys.exit("--lane profile needs at least one entry name")
+    sf_dir = env_sf_dir()[0]
+    b = Bench("bench_profile")
+    b.warm_up(sf_dir)
+    os.makedirs(args.out_dir, exist_ok=True)
+    out: dict[str, object] = {}
+    for name in args.targets:
+        if name not in b.queries:
+            out[name] = "MISSING"
+            continue
+        try:
+            out[name] = runs = []
+            for _ in range(2):
+                rec, df = b.measure(name, sf_dir, procs=True)
+                runs.append(rec)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            with open(os.path.join(args.out_dir, f"{name}.txt"), "w") as fh:
+                fh.write(plan)
+        except Exception as exc:  # noqa: BLE001 — profile the rest
+            out[name] = f"{type(exc).__name__}: {exc}"[:300]
+    b.close()
+    print(json.dumps(out, indent=1))
+
+
+def main(argv: list[str] | None = None) -> None:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--lane", choices=("sweep", "scale", "profile"), default="sweep")
+    p.add_argument("targets", nargs="*",
+                   help="scale: the decade's two sfs; profile: entry names")
+    p.add_argument("--out-dir", default=os.path.join(ROOT, "plans", "profile"),
+                   help="profile: where each entry's plan is written")
+    args = p.parse_args(argv)
+    if args.lane == "sweep" and args.targets:
+        p.error("the sweep lane takes no positional arguments")
+    {"sweep": sweep, "scale": scale, "profile": profile}[args.lane](args)
 
 
 if __name__ == "__main__":

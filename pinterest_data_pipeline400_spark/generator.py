@@ -286,7 +286,7 @@ def write_fixtures(sf_name: str, root: str = FIXTURES_ROOT) -> str:
 
     ATOMIC PUBLISH: everything builds into a pid-unique staging dir and
     renames into place at the end, so a concurrent session (pytest next
-    to bench.py, parallel drivers) either sees the previous complete
+    to a bench.py lane, parallel drivers) either sees the previous complete
     generation or the new complete one — never half-written parquet
     footers or a JSONL mid-rewrite. If two builders race, one rename
     wins and the loser adopts the winner's output.

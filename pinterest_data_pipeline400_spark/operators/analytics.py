@@ -138,13 +138,3 @@ def bucketize(col: Column, edges: Sequence[tuple[float, float, str]], otherwise:
     assert expr is not None
     return expr.otherwise(otherwise)
 
-
-def count_by(df: DataFrame, group_by: Sequence[str], alias: str) -> DataFrame:
-    """Hash group-by + count (reference A1/A2). Catalyst plans this as a
-    partial (map-side) + final aggregate — no engine work needed."""
-    return df.groupBy(*group_by).agg(F.count(F.lit(1)).alias(alias))
-
-
-def with_year(df: DataFrame, ts_col: str, alias: str = "post_year") -> DataFrame:
-    """``year(timestamp)`` projection (reference F3, mount.py:260,369)."""
-    return df.withColumn(alias, F.year(ts_col))

@@ -209,11 +209,7 @@ def stream_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on-heap-only HDFS default: identical oracle-checked output AND "
     "identical restart recovery, proving state-backend portability of "
     "the checkpoint contract. At 100 TB of keys this provider is the "
-    "difference between bounded executor heap and OOM. (The successor "
-    "transformWithStateInPandas API is implemented too — "
-    "streaming.stateful_running_counts_tws — but its Python worker "
-    "protocol needs protobuf, absent from this sandbox; an "
-    "importorskip test exercises it wherever protobuf exists.)",
+    "difference between bounded executor heap and OOM.",
 )
 def stream_stateful_counts_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_two_phase_stateful(

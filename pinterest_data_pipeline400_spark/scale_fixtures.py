@@ -228,7 +228,8 @@ def ensure_sf10_fixtures() -> str:
     written as the generator's FIXTURE_VERSION so `fixture_dir_for`
     accepts the dir; the `_SF10_REPLICATED` sidecar pins (sf10 version,
     fixture version) so a generator bump rebuilds HERE by replication.
-    bench_sf10.py always calls this before any entry touches sf10."""
+    `bench.py --lane scale sf1 sf10` calls this before any entry
+    touches sf10."""
     from .generator import FIXTURE_VERSION, FIXTURES_ROOT, ensure_fixtures
 
     src = ensure_fixtures("sf1")

@@ -105,6 +105,24 @@ PYTHON_DAEMON_MODULE = "pinterest_data_pipeline400_spark.pyworker"
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def driver_heap() -> str:
+    """``spark.driver.memory`` for a local session: a quarter of the
+    host's ``MemTotal``, within [2 GiB, 16 GiB]. In local mode the
+    driver JVM is also the executor, so this is the engine's whole
+    memory budget; the other three quarters stay with the Python
+    workers, the page cache and whatever runs beside the JVM (the test
+    suite's in-process DuckDB oracles). 16 GiB, reached on a 64 GiB
+    host, held a full registry sweep at sf1 with the posting-join
+    baselines in it, where 8 GiB ran out. ``perfbench`` computes the
+    same figure for its ``-Xms``, so its heap starts at this size."""
+    mem_kb = 0
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                mem_kb = int(line.split()[1])
+    return f"{max(2048, min(16384, mem_kb // 1024 // 4))}m"
+
+
 def build_session(
     app_name: str = "pinterest_data_pipeline400_spark",
     cpus: int | None = None,
@@ -127,22 +145,7 @@ def build_session(
         )
         .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
-        # local-mode heap: the driver JVM IS the executor, so this is
-        # the whole memory budget on the 128 GiB local[32] rig. 8g held
-        # through round 9, but the sf1 full sweep runs the DOCUMENTED
-        # degenerate posting-join baselines (docs_dup_containment:
-        # 402M candidate rows) in a JVM already carrying ~280 entries
-        # of accumulated block-manager state, and one r10 run OOM'd a
-        # task there, killing the context and erroring every later
-        # entry. 16g restores the headroom; a real cluster sizes
-        # executors independently (see PERF.md "100 TB configuration
-        # deltas"). Since r12 the posting baselines are OUT of the
-        # default bench lane (SPARK_GRAFT_BASELINE_LANE=1 opts in), so
-        # the default sweep no longer approaches this ceiling — 16g is
-        # kept for the opt-in lane and ad-hoc sessions.
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        )
+        .config("spark.driver.memory", driver_heap())
         .config("spark.ui.enabled", "false")
         # keep managed-table data and the embedded-Derby log out of the
         # process cwd (a caller-built session without these just writes
@@ -273,8 +276,3 @@ def scoped_state_partitions(spark: SparkSession):
     with scoped_shuffle_partitions(spark, n):
         yield
 
-
-def get_session() -> SparkSession:
-    """Return the active session, building one with defaults if absent."""
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session()

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators.clean import clean_geo, clean_pin, clean_user
-from .session import STREAM_DRAIN_TIMEOUT_SEC
 from .schemas import GEO_RAW, PIN_RAW, USER_RAW
 
 #: Kinesis-envelope wire schema (stream_emul.py:116-133 analog).
@@ -128,32 +127,6 @@ def write_stream_append(
     return writer.start()
 
 
-def run_pipeline_to_sink(
-    spark: SparkSession,
-    stream_dir: str,
-    table: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    timeout_sec: int = STREAM_DRAIN_TIMEOUT_SEC,
-) -> None:
-    """source → decode → clean → checkpointed append; drains all
-    pending input (AvailableNow) and returns when committed. Dedup
-    runs where the reference ran it: inside the PIN cleaning
-    (clean_pin's dropDuplicates — mount.py's pipeline); geo/user
-    streams append as-cleaned. For explicit at-least-once-input dedup
-    on any stream, compose :func:`dedup_stream` before the sink (the
-    `stream_dedup_watermarked` entry is that form, driver-checked)."""
-    raw = read_envelope_stream(spark, stream_dir)
-    cleaned = clean_stream(decode_stream(raw, RAW_SCHEMAS[table]), table)
-    query = write_stream_append(cleaned, sink_dir, checkpoint_dir)
-    try:
-        if not query.awaitTermination(timeout_sec):
-            raise TimeoutError(f"stream {table} did not drain in {timeout_sec}s")
-    finally:
-        if query.isActive:
-            query.stop()
-
-
 def stateful_running_counts(stream: DataFrame, key_col: str = "user_id") -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState`` (the
     escape hatch for semantics built-in streaming aggregates can't
@@ -197,55 +170,12 @@ def stateful_running_counts(stream: DataFrame, key_col: str = "user_id") -> Data
 
 
 #: RocksDB state store provider — the production state backend for
-#: large keyspaces (off-heap, spill-to-disk, changelog checkpointing);
-#: required by transformWithState. The HDFS-backed default keeps every
-#: key on-heap, which caps state at executor memory.
+#: large keyspaces (off-heap, spill-to-disk, changelog checkpointing).
+#: The HDFS-backed default keeps every key on-heap, which caps state at
+#: executor memory.
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
-
-
-def stateful_running_counts_tws(stream: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """The :func:`stateful_running_counts` semantics on Spark 4's
-    ``transformWithStateInPandas`` — the successor stateful API
-    (SPARK-49564 'arbitrary stateful processing v2'): an object-style
-    ``StatefulProcessor`` with named, schema'd state variables instead
-    of one opaque tuple, timers, and composite state (value/list/map)
-    — running on the RocksDB state store (required by this API; set
-    ``spark.sql.streaming.stateStore.providerClass`` before start).
-
-    ENVIRONMENT-GATED: the transformWithState Python worker protocol
-    requires ``google.protobuf``, which this sandbox does not ship —
-    so the driver-checked registry entry runs the v1 operator on
-    RocksDB instead (`stream_stateful_counts_rocksdb`), and an
-    importorskip pytest drives this one wherever protobuf exists."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningCount(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.total = handle.getValueState("total", "total long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            total = self.total.get()[0] if self.total.exists() else 0
-            for pdf in rows:
-                total += len(pdf)
-            self.total.update((total,))
-            yield pd.DataFrame({key_col: [key[0]], "n_events_so_far": [total]})
-
-        def close(self) -> None:
-            pass
-
-    key_dtype = stream.schema[key_col].dataType.simpleString()
-    return stream.groupBy(F.col(key_col)).transformWithStateInPandas(
-        RunningCount(),
-        outputStructType=f"{key_col} {key_dtype}, n_events_so_far long",
-        outputMode="append",
-        timeMode="none",
-    )
 
 
 def fresh_dirs(base: str) -> tuple[str, str]:

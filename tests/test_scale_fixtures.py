@@ -75,11 +75,11 @@ def test_documents_are_salted_per_replica(sf1):
 
 
 # ---------------------------------------------------------------------------
-# sf10 second-decade builders (VERDICT r12 task #3)
+# sf10 second-decade builders
 # ---------------------------------------------------------------------------
 # The transform invariants are unit-tested cheaply here; the full sf10
-# materialization (~4 GB) runs only in the opt-in stress lane — the
-# bench_sf10.py lane exercises it end-to-end anyway.
+# materialization (~4 GB) runs only in the opt-in stress lane, and
+# `bench.py --lane scale sf1 sf10` exercises it end-to-end.
 
 import os
 

@@ -145,47 +145,6 @@ def test_stateful_counts_on_rocksdb_statestore(spark, tmp_path):
     assert arts, "no RocksDB state artifacts found — provider conf did not engage"
 
 
-def test_stateful_counts_tws_needs_protobuf(spark):
-    """transformWithStateInPandas is implemented but its worker
-    protocol needs protobuf; exercised wherever that exists."""
-    pytest.importorskip("google.protobuf")
-    import pandas as pd
-
-    from pinterest_data_pipeline400_spark.streaming import (
-        ROCKSDB_PROVIDER,
-        stateful_running_counts_tws,
-    )
-
-    # mirror of the RocksDB test on the v2 API
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as tmp:
-        in_dir, sink, ckpt = (os.path.join(tmp, d) for d in ("in", "sink", "ckpt"))
-        os.makedirs(in_dir)
-        pd.DataFrame({"user_id": [1, 1, 2]}).to_parquet(
-            os.path.join(in_dir, "p0.parquet")
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
-        try:
-            stream = spark.readStream.schema("user_id long").parquet(in_dir)
-            q = (
-                stateful_running_counts_tws(stream)
-                .writeStream.format("parquet")
-                .option("checkpointLocation", ckpt)
-                .option("path", sink)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            assert q.awaitTermination(60)
-        finally:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        out = {r.user_id: r.n_events_so_far for r in spark.read.parquet(sink).collect()}
-        assert out == {1: 2, 2: 1}
-
-
 def test_foreach_batch_sink_idempotent_partitions(spark, tmp_path):
     """foreachBatch contract: each micro-batch lands as batch-id-keyed
     partitioned output (idempotent under micro-batch retry), and a
