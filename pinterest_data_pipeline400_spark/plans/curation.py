@@ -2573,15 +2573,77 @@ UNI_VOCAB_N = 40    # top substring candidates kept (plus ALL single chars)
 UNI_EM_ROUNDS = 2   # Viterbi-EM iterations (E: segment, M: re-estimate)
 
 
+def _uni_dp_round_ctes(tag: str, vocab_cte: str) -> list[str]:
+    """One Viterbi E-step as CTE strings: piece lattice joined to
+    ``vocab_cte``'s log-probs, UNI_MAX_WLEN forward and UNI_MAX_WLEN
+    backward DP stages, tie-inclusive membership, and counts —
+    name-suffixed by ``tag`` so every EM round and the prune round
+    share ONE emitter.
+
+    DuckDB inlines a CTE that is not ``AS MATERIALIZED`` at every
+    reference. Each DP stage is read by its successor and by the
+    membership join, so unmaterialised stages would expand 2^stages
+    times. The lattice ``upv_{tag}`` is read by every stage and by the
+    membership join, and each inlined copy would expand ``vocab_cte``
+    (and through it every earlier round) again: the plan would grow
+    geometrically with the rounds. The lattice is therefore materialised
+    as well as the stages, and ``vocab_cte`` is planned once per round."""
+    parts = [f"""
+    upv_{tag} AS MATERIALIZED (
+              SELECT p.word, p.freq, p.i, p.j, p.piece, v.lp
+              FROM upc p JOIN {vocab_cte} v USING (piece)),
+    udpf_{tag}_0 AS (SELECT word, freq, CAST(0 AS BIGINT) AS pos,
+                          CAST(0 AS BIGINT) AS dp FROM uwf)"""]
+    for s in range(1, UNI_MAX_WLEN + 1):
+        parts.append(f"""
+    udpf_{tag}_{s} AS MATERIALIZED (
+      SELECT * FROM udpf_{tag}_{s - 1}
+      UNION ALL
+      SELECT p.word, p.freq, CAST({s} AS BIGINT) AS pos,
+             CAST(max(d.dp + p.lp * 64 - 1) AS BIGINT) AS dp
+      FROM upv_{tag} p JOIN udpf_{tag}_{s - 1} d
+        ON d.word = p.word AND d.pos = p.i
+      WHERE p.j = {s}
+      GROUP BY p.word, p.freq)""")
+    parts.append(f"""
+    udpb_{tag}_{UNI_MAX_WLEN} AS (SELECT word, freq,
+                          CAST(len(word) AS BIGINT) AS pos,
+                          CAST(0 AS BIGINT) AS dp FROM uwf)""")
+    for s in range(UNI_MAX_WLEN - 1, -1, -1):
+        parts.append(f"""
+    udpb_{tag}_{s} AS MATERIALIZED (
+      SELECT * FROM udpb_{tag}_{s + 1}
+      UNION ALL
+      SELECT p.word, p.freq, CAST({s} AS BIGINT) AS pos,
+             CAST(max(p.lp * 64 - 1 + d.dp) AS BIGINT) AS dp
+      FROM upv_{tag} p JOIN udpb_{tag}_{s + 1} d
+        ON d.word = p.word AND d.pos = p.j
+      WHERE p.i = {s} AND len(p.word) > {s}
+      GROUP BY p.word, p.freq)""")
+    parts.append(f"""
+    umem_{tag} AS (SELECT p.piece, p.freq
+               FROM upv_{tag} p
+               JOIN udpf_{tag}_{UNI_MAX_WLEN} f
+                 ON f.word = p.word AND f.pos = p.i
+               JOIN udpb_{tag}_0 b ON b.word = p.word AND b.pos = p.j
+               JOIN udpf_{tag}_{UNI_MAX_WLEN} o
+                 ON o.word = p.word AND o.pos = len(p.word)
+               WHERE f.dp + p.lp * 64 - 1 + b.dp = o.dp),
+    ucnt_{tag} AS (SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt
+               FROM umem_{tag} GROUP BY piece)""")
+    return parts
+
+
 def _unigram_cte_parts(rounds: int) -> list[str]:
     """CTE strings (no leading WITH) for the unrolled Viterbi-EM
     unigram-tokenizer training — the _bpe_train_cte_parts idiom: one
     generator feeds both the trainer entry and the apply entry so the
-    oracles cannot drift structurally. Per EM round the word-position
-    DP unrolls into {UNI_MAX_WLEN} forward and {UNI_MAX_WLEN} backward
-    stages (AS MATERIALIZED — each stage is referenced by its
-    successor AND the membership join, and DuckDB would otherwise
-    inline the chain 2^stages times)."""
+    oracles cannot drift structurally. Each EM round is one
+    _uni_dp_round_ctes E-step plus the add-1 M-step ``uvoc_{t}``.
+    ``uvoc_{t}`` is AS MATERIALIZED: DuckDB inlines an unmaterialised
+    CTE at every reference, and the next round's lattice, the apply
+    pass and the prune step all read it, so inlining would re-plan the
+    whole previous round at each of those places."""
     parts = [
         f"""uwtok AS (SELECT unnest(string_split({_NORM_SQL}, ' ')) AS word
               FROM documents),
@@ -2610,55 +2672,16 @@ def _unigram_cte_parts(rounds: int) -> list[str]:
                FROM uvoc0c CROSS JOIN utot0 t)"""
     ]
     for t in range(1, rounds + 1):
+        parts.extend(_uni_dp_round_ctes(str(t), f"uvoc_{t - 1}"))
         parts.append(f"""
-    upv_{t} AS (SELECT p.word, p.freq, p.i, p.j, p.piece, v.lp
-              FROM upc p JOIN uvoc_{t - 1} v USING (piece)),
-    udpf_{t}_0 AS (SELECT word, freq, CAST(0 AS BIGINT) AS pos,
-                          CAST(0 AS BIGINT) AS dp FROM uwf)""")
-        for s in range(1, UNI_MAX_WLEN + 1):
-            parts.append(f"""
-    udpf_{t}_{s} AS MATERIALIZED (
-      SELECT * FROM udpf_{t}_{s - 1}
-      UNION ALL
-      SELECT p.word, p.freq, CAST({s} AS BIGINT) AS pos,
-             CAST(max(d.dp + p.lp * 64 - 1) AS BIGINT) AS dp
-      FROM upv_{t} p JOIN udpf_{t}_{s - 1} d
-        ON d.word = p.word AND d.pos = p.i
-      WHERE p.j = {s}
-      GROUP BY p.word, p.freq)""")
-        parts.append(f"""
-    udpb_{t}_{UNI_MAX_WLEN} AS (SELECT word, freq,
-                          CAST(len(word) AS BIGINT) AS pos,
-                          CAST(0 AS BIGINT) AS dp FROM uwf)""")
-        for s in range(UNI_MAX_WLEN - 1, -1, -1):
-            parts.append(f"""
-    udpb_{t}_{s} AS MATERIALIZED (
-      SELECT * FROM udpb_{t}_{s + 1}
-      UNION ALL
-      SELECT p.word, p.freq, CAST({s} AS BIGINT) AS pos,
-             CAST(max(p.lp * 64 - 1 + d.dp) AS BIGINT) AS dp
-      FROM upv_{t} p JOIN udpb_{t}_{s + 1} d
-        ON d.word = p.word AND d.pos = p.j
-      WHERE p.i = {s} AND len(p.word) > {s}
-      GROUP BY p.word, p.freq)""")
-        parts.append(f"""
-    umem_{t} AS (SELECT p.piece, p.freq
-               FROM upv_{t} p
-               JOIN udpf_{t}_{UNI_MAX_WLEN} f
-                 ON f.word = p.word AND f.pos = p.i
-               JOIN udpb_{t}_0 b ON b.word = p.word AND b.pos = p.j
-               JOIN udpf_{t}_{UNI_MAX_WLEN} o
-                 ON o.word = p.word AND o.pos = len(p.word)
-               WHERE f.dp + p.lp * 64 - 1 + b.dp = o.dp),
-    ucnt_{t} AS (SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt
-               FROM umem_{t} GROUP BY piece),
     us_{t} AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS total
              FROM ucnt_{t}),
-    uvoc_{t} AS (SELECT v0.piece,
-                        CAST(coalesce(c.cnt, 0) AS BIGINT) AS cnt,
-                        CAST(round(log10((coalesce(c.cnt, 0) + 1.0)
-                                         / (s.total + nv.v)) * 1e9)
-                             AS BIGINT) AS lp
+    uvoc_{t} AS MATERIALIZED (
+               SELECT v0.piece,
+                      CAST(coalesce(c.cnt, 0) AS BIGINT) AS cnt,
+                      CAST(round(log10((coalesce(c.cnt, 0) + 1.0)
+                                       / (s.total + nv.v)) * 1e9)
+                           AS BIGINT) AS lp
                FROM uvoc_0 v0 LEFT JOIN ucnt_{t} c USING (piece)
                CROSS JOIN us_{t} s CROSS JOIN unv nv)""")
     return parts
@@ -2681,10 +2704,14 @@ def _unigram_oracle_sql(rounds: int) -> str:
 def _unigram_apply_oracle_sql(rounds: int) -> str:
     """Apply the FINAL trained vocab back to the word table: one more
     forward Viterbi whose combined dp encodes (score, -n_pieces)
-    lexicographically — n_pieces recovers as (-dp) % 64."""
+    lexicographically — n_pieces recovers as (-dp) % 64. The lattice
+    ``upva`` is AS MATERIALIZED like the stages that read it: DuckDB
+    inlines an unmaterialised CTE at every reference, and each of the
+    UNI_MAX_WLEN stages would otherwise re-plan the trained vocab."""
     parts = _unigram_cte_parts(rounds)
     parts.append(f"""
-    upva AS (SELECT p.word, p.freq, p.i, p.j, v.lp
+    upva AS MATERIALIZED (
+             SELECT p.word, p.freq, p.i, p.j, v.lp
              FROM upc p JOIN uvoc_{rounds} v USING (piece)),
     udpa_0 AS (SELECT word, freq, CAST(0 AS BIGINT) AS pos,
                       CAST(0 AS BIGINT) AS dp FROM uwf)""")
@@ -3109,57 +3136,6 @@ def docs_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 UNI_PRUNE_KEEP = 20  # multi-char pieces kept (single chars always survive)
-
-
-def _uni_dp_round_ctes(tag: str, vocab_cte: str) -> list[str]:
-    """One Viterbi E-step as CTE strings: piece lattice joined to
-    ``vocab_cte``'s log-probs, forward/backward DP stages (MATERIALIZED
-    — the _unigram_cte_parts argument), tie-inclusive membership, and
-    counts — name-suffixed by ``tag`` so the training loop and the
-    prune round share ONE emitter."""
-    parts = [f"""
-    upv_{tag} AS (SELECT p.word, p.freq, p.i, p.j, p.piece, v.lp
-              FROM upc p JOIN {vocab_cte} v USING (piece)),
-    udpf_{tag}_0 AS (SELECT word, freq, CAST(0 AS BIGINT) AS pos,
-                          CAST(0 AS BIGINT) AS dp FROM uwf)"""]
-    for s in range(1, UNI_MAX_WLEN + 1):
-        parts.append(f"""
-    udpf_{tag}_{s} AS MATERIALIZED (
-      SELECT * FROM udpf_{tag}_{s - 1}
-      UNION ALL
-      SELECT p.word, p.freq, CAST({s} AS BIGINT) AS pos,
-             CAST(max(d.dp + p.lp * 64 - 1) AS BIGINT) AS dp
-      FROM upv_{tag} p JOIN udpf_{tag}_{s - 1} d
-        ON d.word = p.word AND d.pos = p.i
-      WHERE p.j = {s}
-      GROUP BY p.word, p.freq)""")
-    parts.append(f"""
-    udpb_{tag}_{UNI_MAX_WLEN} AS (SELECT word, freq,
-                          CAST(len(word) AS BIGINT) AS pos,
-                          CAST(0 AS BIGINT) AS dp FROM uwf)""")
-    for s in range(UNI_MAX_WLEN - 1, -1, -1):
-        parts.append(f"""
-    udpb_{tag}_{s} AS MATERIALIZED (
-      SELECT * FROM udpb_{tag}_{s + 1}
-      UNION ALL
-      SELECT p.word, p.freq, CAST({s} AS BIGINT) AS pos,
-             CAST(max(p.lp * 64 - 1 + d.dp) AS BIGINT) AS dp
-      FROM upv_{tag} p JOIN udpb_{tag}_{s + 1} d
-        ON d.word = p.word AND d.pos = p.j
-      WHERE p.i = {s} AND len(p.word) > {s}
-      GROUP BY p.word, p.freq)""")
-    parts.append(f"""
-    umem_{tag} AS (SELECT p.piece, p.freq
-               FROM upv_{tag} p
-               JOIN udpf_{tag}_{UNI_MAX_WLEN} f
-                 ON f.word = p.word AND f.pos = p.i
-               JOIN udpb_{tag}_0 b ON b.word = p.word AND b.pos = p.j
-               JOIN udpf_{tag}_{UNI_MAX_WLEN} o
-                 ON o.word = p.word AND o.pos = len(p.word)
-               WHERE f.dp + p.lp * 64 - 1 + b.dp = o.dp),
-    ucnt_{tag} AS (SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt
-               FROM umem_{tag} GROUP BY piece)""")
-    return parts
 
 
 def _unigram_prune_oracle_sql() -> str:
